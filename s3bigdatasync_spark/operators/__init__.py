@@ -30,6 +30,7 @@ _PREPARED: set[tuple[int, str]] = set()
 # construct-then-materialize serially; the lock below only makes the list
 # mutation safe under concurrent construction, it does not lift the contract.
 import threading
+import time
 
 _SCOPED_CACHES: list = []
 _SCOPED_LOCK = threading.Lock()
@@ -78,6 +79,32 @@ def release_caches() -> int:
         except Exception:
             pass  # session already stopped — nothing to release
     return n
+
+
+_OBSERVATION_WAIT_S = 120.0
+
+
+def observed(obs, what: str) -> dict:
+    """The metrics of an Observation whose action has returned, with a
+    bounded wait. `obs.get` blocks until the Observation listener fires; on
+    a runtime that never fires it for the action (a checkpoint under some
+    runtimes) an unbounded get would hang silently. So on classic Spark
+    poll the Java-side row, sleeping between polls, and fail loudly after
+    _OBSERVATION_WAIT_S. An Observation without a Java object (Spark
+    Connect) gets its metrics with the action's response, so `obs.get`
+    returns at once. The metrics land within milliseconds of the action
+    returning, so the first poll finds them in practice."""
+    jo = getattr(obs, "_jo", None)
+    deadline = time.monotonic() + _OBSERVATION_WAIT_S
+    while jo is not None and not jo.getRowOrEmpty().isDefined():
+        if time.monotonic() >= deadline:
+            raise RuntimeError(
+                f"{what}: the action completed but its Observation metrics "
+                f"never arrived within {_OBSERVATION_WAIT_S:.0f} s — this "
+                "runtime does not report observed metrics for this action"
+            )
+        time.sleep(0.002)
+    return obs.get
 
 
 def prepared(spark: SparkSession, sf_dir: str) -> SparkSession:

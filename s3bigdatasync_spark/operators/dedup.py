@@ -21,12 +21,10 @@ them exactly.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import prepared, scoped_cache
+from . import observed, prepared, scoped_cache
 
 SHINGLE_N = 5
 EMBEDDING_DIM = 64
@@ -941,25 +939,11 @@ def _cc_labels(edges: DataFrame, what: str) -> DataFrame:
             .select("doc_id", "lbl")
         )
         # sum over an empty relation observes NULL — an empty graph is
-        # converged. obs.get blocks until the Observation listener fires;
-        # the eager localCheckpoint above guarantees that on CLASSIC Spark
-        # (Dataset.withAction wraps the checkpoint job). On a runtime that
-        # doesn't fire Observation listeners for checkpoint actions (e.g.
-        # Spark Connect) an unbounded obs.get would hang silently, so poll
-        # the Java-side row with a deadline and fail loudly instead
-        # (ADVICE r11). The metric lands within milliseconds of the eager
-        # checkpoint returning, so the loop exits on its first iteration in
-        # practice.
-        deadline = time.monotonic() + 120.0
-        while obs._jo is not None and not obs._jo.getRowOrEmpty().isDefined():
-            if time.monotonic() >= deadline:
-                raise RuntimeError(
-                    f"{what}: checkpoint completed but its Observation "
-                    "metrics never arrived — this runtime does not report "
-                    "observed metrics for localCheckpoint actions "
-                    "(classic-Spark assumption violated)"
-                )
-        if not obs.get["n_chg"]:
+        # converged. The eager localCheckpoint above fires the Observation
+        # listener on CLASSIC Spark (Dataset.withAction wraps the checkpoint
+        # job); `observed` bounds the wait for a runtime that does not
+        # (ADVICE r11).
+        if not observed(obs, f"{what}: label-propagation checkpoint")["n_chg"]:
             return labels
     # a silent fall-through here would return wrong cluster labels with no
     # signal at production scale where no oracle runs

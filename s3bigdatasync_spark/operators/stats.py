@@ -8,7 +8,7 @@ keys here have tiny cardinality), which is the right shape.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import prepared
@@ -36,14 +36,20 @@ def size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — map-side partials, single-row result, no wide shuffle.
     """
     inv = prepared(spark, sf_dir).table("inventory_src")
-    aggs = [
+    return inv.agg(*size_stats_exprs())
+
+
+def size_stats_exprs() -> list[Column]:
+    """The D1 aggregates: object count, total bytes and one cumulative
+    count per SIZE_BUCKETS threshold. Shared by size_histogram and the
+    Observation on list_producer's task-store write."""
+    return [
         F.count("*").alias("total_objects"),
         F.sum("size").alias("total_size_bytes"),
     ] + [
         F.sum(F.when(F.col("size") <= t, 1).otherwise(0)).alias(name)
         for name, t in SIZE_BUCKETS
     ]
-    return inv.agg(*aggs)
 
 
 _SIZE_HISTOGRAM_SQL = oracle_cte("inventory_src") + """

@@ -5,36 +5,41 @@
 §3.3 Monitor/UI    → monitor_stats(), dashboard_progress(): rollups
 
 The reference moves data through SQS/DynamoDB with hand-rolled batching,
-retries and dead-lettering; here the task store is a partitioned file table
-(each output file ≙ one SQS message batch of ~TASK_BATCH_SIZE objects), the
-copy is a pluggable per-partition callable (boto3 in production, local FS in
-tests), failures are quarantined by a filter, and idempotence comes from the
-msg_id anti-join (operators.joins.dedup_anti_join pattern).
+retries and dead-lettering; here the task store is a file table (each
+output file ≙ one SQS message batch of at most TASK_BATCH_SIZE objects),
+the copy is a pluggable per-row callable (boto3 in production, local FS in
+tests), and failures are quarantined by a filter. Each stage is one pass:
+its counts are Observation metrics of its own write.
+
+Not idempotent yet: copy_log and dead_letter are append-only, so a re-run
+over the same task store copies and logs every object again. Skipping
+logged objects (a copy_log anti-join, the operators.joins.dedup_anti_join
+pattern) is ROADMAP direction 2.
 """
 
 from __future__ import annotations
 
-import math
+import json
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.stats import SIZE_BUCKETS
+from ..operators import observed
+from ..operators.stats import size_stats_exprs
 
 TASK_BATCH_SIZE = 100  # objects per task file ≙ message_body_max_num (ListProducer.py:17)
 
-
-def compute_stats(inv: DataFrame) -> DataFrame:
-    """§3.1 step: the D1 histogram as the manifest 'statistics' block."""
-    aggs = [
-        F.count("*").alias("total_objects"),
-        F.sum("size").alias("total_size_bytes"),
-    ] + [
-        F.sum(F.when(F.col("size") <= t, 1).otherwise(0)).alias(name)
-        for name, t in SIZE_BUCKETS
-    ]
-    return inv.agg(*aggs)
+TASK_SCHEMA = "bucket string, dst_bucket string, key string, size long"
+COPY_LOG_SCHEMA = (
+    "object_key string, replication_time timestamp, replication_status long, size long"
+)
+_LOG_COLUMNS = ["object_key", "replication_time", "replication_status", "size"]
+# what the Arrow copy emits: replication_time as epoch seconds, converted on
+# the JVM side exactly as the log has always stored it
+_COPY_OUT_SCHEMA = COPY_LOG_SCHEMA.replace(
+    "replication_time timestamp", "replication_time double"
+)
 
 
 def list_producer(
@@ -44,22 +49,21 @@ def list_producer(
     tasks_dir: str,
     stats_path: str | None = None,
 ) -> dict:
-    """§3.1: inventory → size stats + batched task store.
+    """§3.1: inventory → size stats + batched task store, in one pass.
 
-    Task batching is per-partition at the sink (repartition to
-    ceil(n/TASK_BATCH_SIZE) files) — no global sort, no driver loop; at
-    100 TB this is one round-robin shuffle sized by the object count.
-    Returns the enriched job stats dict (≙ job.json, ListProducer.py:135-157).
+    One write of the task store, at most TASK_BATCH_SIZE objects per file
+    (`maxRecordsPerFile` cuts files inside each write task: no count, no
+    shuffle). An Observation on that write collects the count, total bytes
+    and SIZE_BUCKETS histogram of exactly the objects the store holds.
+    Returns the job stats dict (≙ job.json, ListProducer.py:135-157).
     """
-    tasks = inv.withColumn("dst_bucket", F.lit(dst_bucket))
-    n = tasks.count()
-    n_files = max(1, math.ceil(n / TASK_BATCH_SIZE))
-    tasks.repartition(n_files).write.mode("overwrite").json(tasks_dir)
-    stats_row = compute_stats(inv).collect()[0].asDict()
-    job = {"statistics": stats_row, "job_info": {"dst_bucket": dst_bucket, "n_tasks": n}}
+    obs = Observation()
+    tasks = inv.withColumn("dst_bucket", F.lit(dst_bucket)).observe(obs, *size_stats_exprs())
+    tasks.write.mode("overwrite").option("maxRecordsPerFile", TASK_BATCH_SIZE).json(tasks_dir)
+    stats = observed(obs, "list_producer")
+    n = stats["total_objects"]
+    job = {"statistics": stats, "job_info": {"dst_bucket": dst_bucket, "n_tasks": n}}
     if stats_path:
-        import json
-
         with open(stats_path, "w") as f:
             json.dump(job, f, default=str)
     return job
@@ -70,6 +74,47 @@ CopyFn = Callable[[str, str, str], bool]
 copy (libs/s3_utils.py:17-35); tests: local FS toucher."""
 
 
+def _copy_batches(fn: CopyFn) -> Callable[[Iterator], Iterator]:
+    """The mapInArrow kernel: calls `fn` once per task row, in a per-row
+    try so a raising copy is a failed copy (status 0), and emits one log
+    row per task with replication_time as epoch seconds. A closure, so
+    Spark pickles it by value and workers need not import this package."""
+
+    def copy(batches: Iterator) -> Iterator:
+        import time
+
+        import pyarrow as pa
+
+        for b in batches:
+            status, stamp = [], []
+            rows = zip(*(b.column(c).to_pylist() for c in ("bucket", "dst_bucket", "key")))
+            for src, dst, key in rows:
+                try:
+                    ok = fn(src, dst, key)
+                except Exception:
+                    ok = False
+                status.append(1 if ok else 0)
+                stamp.append(time.time())
+            stamps, statuses = pa.array(stamp, pa.float64()), pa.array(status, pa.int64())
+            cols = [b.column("key"), stamps, statuses, b.column("size")]
+            yield pa.RecordBatch.from_arrays(cols, names=_LOG_COLUMNS)
+
+    return copy
+
+
+def _data_files(spark: SparkSession, path: str) -> set[str]:
+    """The data files directly under `path` (names starting with '_' or '.'
+    are metadata, as Spark reads them), listed through the Hadoop
+    FileSystem so a directory that does not exist yet is an empty set, not
+    a failed read."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        return set()
+    paths = (st.getPath() for st in fs.listStatus(jpath))
+    return {p.toString() for p in paths if not p.getName().startswith(("_", "."))}
+
+
 def task_executor(
     spark: SparkSession,
     tasks_dir: str,
@@ -77,45 +122,37 @@ def task_executor(
     copy_log_dir: str,
     dead_letter_dir: str,
 ) -> tuple[int, int]:
-    """§3.2: consume the task store, execute copies per partition, log
-    status, quarantine failures (B8/B9).
+    """§3.2: consume the task store, copy every object exactly once, log
+    both statuses, quarantine failures (B8/B9).
 
-    The copy runs inside mapPartitions with bounded per-task work — the Spark
-    translation of the competing-consumers loop (TaskExecutor.py:18-102).
-    Task retries replace the SQS visibility/redrive machinery; the
-    dead-letter table replaces the `*-dead-letter` queue, and keeps the job
-    'successful' exactly like the reference (TaskExecutor.py:79-85).
-    Returns (n_success, n_failed).
+    The task store is read with its declared schema (no inference job) and
+    copied by `mapInArrow` with a declared output schema, so no copy runs
+    twice to infer types — the Spark translation of the competing-consumers
+    loop (TaskExecutor.py:18-102). The log, holding BOTH statuses like the
+    reference's (TaskExecutor.py:66-80), is written once; an Observation on
+    that write counts rows and failures. Failures also go to the dead-letter
+    table (79-85), read back from the log files this call added, so an
+    earlier run's failures are not dead-lettered again (one writer per
+    copy_log_dir assumed). The job stays 'successful' like the reference;
+    task retries replace SQS redrive. Returns (n_success, n_failed).
     """
-    tasks = spark.read.json(tasks_dir)
-    fn = copy_fn  # rebind for closure pickling
-
-    def run_partition(rows: Iterator) -> Iterator[tuple]:
-        import time as _t
-
-        for r in rows:
-            ok = False
-            try:
-                ok = fn(r["bucket"], r["dst_bucket"], r["key"])
-            except Exception:
-                ok = False
-            yield (r["key"], float(_t.time()), 1 if ok else 0, r["size"])
-
-    results = tasks.rdd.mapPartitions(run_partition).toDF(
-        ["object_key", "replication_time", "replication_status", "size"]
-    ).withColumn("replication_time", F.timestamp_seconds("replication_time"))
-    results = results.cache()
-    # Reference logs BOTH statuses to the monitor table (item_log with
-    # ReplicationStatus 0/1, TaskExecutor.py:66-80) and additionally routes
-    # the failed action to the dead-letter queue for retry (79-85).
-    results.write.mode("append").parquet(copy_log_dir)
-    failed = results.filter(F.col("replication_status") == 0)
-    n_failed = failed.count()
+    obs = Observation()
+    failed = F.col("replication_status") == 0
+    log = (
+        spark.read.schema(TASK_SCHEMA).json(tasks_dir)
+        .mapInArrow(_copy_batches(copy_fn), _COPY_OUT_SCHEMA)
+        .withColumn("replication_time", F.timestamp_seconds("replication_time"))
+        .observe(obs, F.count("*").alias("n"), F.count(F.when(failed, 1)).alias("failed"))
+    )
+    before = _data_files(spark, copy_log_dir)
+    log.write.mode("append").parquet(copy_log_dir)
+    counts = observed(obs, "task_executor")
+    n, n_failed = counts["n"], counts["failed"]
     if n_failed:
-        failed.write.mode("append").parquet(dead_letter_dir)
-    n_success = results.count() - n_failed
-    results.unpersist()
-    return n_success, n_failed
+        added = sorted(_data_files(spark, copy_log_dir) - before)
+        dead = spark.read.schema(COPY_LOG_SCHEMA).parquet(*added).filter(failed)
+        dead.write.mode("append").parquet(dead_letter_dir)
+    return n - n_failed, n_failed
 
 
 def monitor_stats(spark: SparkSession, copy_log_dir: str, stat_dir: str) -> None:

@@ -68,6 +68,7 @@ is now assembled from per-segment partials at read time.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -83,10 +84,19 @@ _MANIFEST_SCHEMA = "seg string, tier int, n_rows long"
 _FILES_SCHEMA = "file_path string"
 _SEG_PREFIXES = ("manifest", "files")
 
-# state_dir -> the token of the writer allowed to flip it (see the
-# single-writer contract note inside segmented_count_sink). Keyed per
+# _writer_key(state_dir) -> the token of the writer allowed to flip it (see
+# the single-writer contract note inside segmented_count_sink). Keyed per
 # driver process; never cleaned up — a handful of object() sentinels.
 _ACTIVE_WRITERS: dict[str, object] = {}
+
+
+def _writer_key(state_dir: str) -> str:
+    """One key per directory however it is spelled: local paths are
+    resolved (relative, `..`, symlinks, trailing slash); a URI (`s3a://…`)
+    only loses its trailing slash, since realpath would mangle it."""
+    if "://" in state_dir:
+        return state_dir.rstrip("/")
+    return os.path.realpath(state_dir)
 
 
 def _key_names(counts_schema: str) -> list[str]:
@@ -290,10 +300,11 @@ def segmented_count_sink(
     # the per-batch overhead the r11 cut removed.
     last_flipped: dict[str, int] = {}
     token = object()
-    _ACTIVE_WRITERS[state_dir] = token
+    writer_key = _writer_key(state_dir)
+    _ACTIVE_WRITERS[writer_key] = token
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if _ACTIVE_WRITERS.get(state_dir) is not token:
+        if _ACTIVE_WRITERS.get(writer_key) is not token:
             raise RuntimeError(
                 f"segmented_count_sink: a newer sink took over state_dir "
                 f"{state_dir!r} in this process — this writer's cached "

@@ -539,3 +539,42 @@ def test_second_sink_takeover_makes_stale_sink_raise(spark, tmp_path):
     assert _rows(dedup_state(spark, state_dir)) == _rows(
         batch_equivalent(spark, docs_dir)
     )
+
+
+def test_takeover_guard_sees_one_dir_under_two_spellings(spark, tmp_path):
+    """The single-writer guard keys the state dir by its resolved path, so a
+    second sink created under another spelling of the SAME directory (a
+    trailing slash, a `..` detour) still takes it over and the first sink
+    raises before it touches the dir."""
+    from s3bigdatasync_spark.streaming.dedup_gate import (
+        _BUCKET,
+        _MERGE_AGGS,
+        _STATE_KEYS,
+        _STATE_SCHEMA,
+        _hash_counts,
+    )
+    from s3bigdatasync_spark.streaming.segments import segmented_count_sink
+
+    (tmp_path / "other").mkdir()
+    spellings = [
+        str(tmp_path / "state"),
+        str(tmp_path / "state") + "/",
+        str(tmp_path / "other" / ".." / "state"),
+    ]
+
+    def mk_sink(state_dir):
+        return segmented_count_sink(
+            state_dir,
+            _STATE_SCHEMA,
+            _STATE_KEYS,
+            _hash_counts,
+            bucket_col=_BUCKET,
+            agg_exprs=_MERGE_AGGS(),
+        )
+
+    for first, second in zip(spellings, spellings[1:] + spellings[:1]):
+        stale = mk_sink(first)
+        mk_sink(second)  # takeover under another spelling
+        with pytest.raises(RuntimeError, match="single-writer"):
+            stale(spark.range(0), 0)
+    assert not (tmp_path / "state").exists()  # every stale sink raised first
