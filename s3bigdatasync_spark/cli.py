@@ -508,7 +508,7 @@ def build_parser() -> argparse.ArgumentParser:
     da.add_argument("--total-size", type=int, default=None,
                     help="manifest total bytes (enables pct_size + eta_seconds)")
     da.add_argument("--window-minutes", type=int, default=60,
-                    help="graph window length in minute slots")
+                    help="graph window length in minute slots (at least 1)")
 
     co = add("corpus", _cmd_corpus, help="north-star corpus yield report")
     co.add_argument("--sf-dir", default=DEFAULT_SF_DIR)

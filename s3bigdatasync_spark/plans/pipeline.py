@@ -2,7 +2,8 @@
 
 §3.1 ListProducer  → list_producer():  inventory scan → stats + task store
 §3.2 TaskExecutor  → task_executor():  task store → copy → copy_log + DLQ
-§3.3 Monitor/UI    → monitor_stats(), dashboard_progress(): rollups
+§3.3 Monitor/UI    → monitor_stats():  copy_log → 1/5/60-minute stat table
+                   → dashboard_report(): stat table → progress + graph JSON
 
 The reference moves data through SQS/DynamoDB with hand-rolled batching,
 retries and dead-lettering; here the task store is a file table (each
@@ -34,6 +35,17 @@ TASK_SCHEMA = "bucket string, dst_bucket string, key string, size long"
 COPY_LOG_SCHEMA = (
     "object_key string, replication_time timestamp, replication_status long, size long"
 )
+STAT_SCHEMA = (
+    "start_time long, success_object_size long, success_object_num long, "
+    "failed_object_size long, failed_object_num long, time_unit int"
+)
+# dashboard_report's graph arrays and the stat column each one reads
+_GRAPH_COLUMNS = {
+    "success_objects": "success_object_num",
+    "failure_objects": "failed_object_num",
+    "success_bytes": "success_object_size",
+    "failure_bytes": "failed_object_size",
+}
 _LOG_COLUMNS = ["object_key", "replication_time", "replication_status", "size"]
 # what the Arrow copy emits: replication_time as epoch seconds, converted on
 # the JVM side exactly as the log has always stored it
@@ -157,8 +169,8 @@ def task_executor(
 
 def monitor_stats(spark: SparkSession, copy_log_dir: str, stat_dir: str) -> None:
     """§3.3 batch leg: 1/5/60-minute rollup of copy_log → stat table
-    partitioned by time_unit (the D4 shape; streaming variant in
-    streaming.monitor)."""
+    (STAT_SCHEMA) partitioned by time_unit (the D4 shape; streaming variant
+    in streaming.monitor)."""
     log = spark.read.parquet(copy_log_dir)
     parts = []
     for minutes in (1, 5, 60):
@@ -181,69 +193,6 @@ def monitor_stats(spark: SparkSession, copy_log_dir: str, stat_dir: str) -> None
     out.write.mode("overwrite").partitionBy("time_unit").parquet(stat_dir)
 
 
-def dashboard_progress(spark: SparkSession, stat_dir: str) -> DataFrame:
-    """§3.3 serving leg: global progress rollup (D7/D8) off the stat table —
-    partition-pruned to time_unit=1."""
-    stat = spark.read.parquet(stat_dir).filter(F.col("time_unit") == 1)
-    return stat.agg(
-        F.sum("success_object_size").alias("success_size"),
-        F.sum("success_object_num").alias("success_num"),
-        F.sum("failed_object_size").alias("failed_size"),
-        F.sum("failed_object_num").alias("failed_num"),
-    )
-
-
-def dashboard_graph(
-    spark: SparkSession, stat_dir: str, window_minutes: int = 60
-) -> DataFrame:
-    """§3.3 serving leg, graph half: the zero-filled per-minute series
-    UICenter's `/tasksGraph` route renders (`ddbModel.returnTasksGraphData`
-    builds 60 zero slots and overwrites the minutes that have a stat row —
-    `UICenter/BackEnd/ddbModel.py:253-275`). Spine = the last
-    `window_minutes` minute slots ending at the stat table's newest minute
-    (the serving anchor — deterministic, no wall clock), outer-joined
-    against the time_unit=1 partition and zero-filled: the
-    time_spine_zero_fill pattern (J2) over the stat table. The spine is
-    `window_minutes` rows driver-built from one 1-row bounds agg; the stat
-    side is partition-pruned (time_unit=1) plus a pushed start_time range
-    filter — at any scale this reads one hour of one partition."""
-    stat = spark.read.parquet(stat_dir).filter(F.col("time_unit") == 1)
-    hi = stat.agg(F.max("start_time").alias("hi")).collect()[0]["hi"]
-    empty_schema = (
-        "start_time long, success_object_num long, failed_object_num long, "
-        "success_object_size long, failed_object_size long"
-    )
-    if hi is None:
-        return spark.createDataFrame([], empty_schema)
-    hi = int(hi)
-    lo = hi - 60 * (window_minutes - 1)
-    spine = spark.range(1).select(
-        F.explode(
-            F.sequence(F.lit(lo), F.lit(hi), F.lit(60))
-        ).alias("start_time")
-    )
-    recent = stat.filter(F.col("start_time") >= lo)
-    return (
-        spine.join(recent, "start_time", "left")
-        .select(
-            "start_time",
-            F.coalesce("success_object_num", F.lit(0))
-            .cast("long")
-            .alias("success_object_num"),
-            F.coalesce("failed_object_num", F.lit(0))
-            .cast("long")
-            .alias("failed_object_num"),
-            F.coalesce("success_object_size", F.lit(0))
-            .cast("long")
-            .alias("success_object_size"),
-            F.coalesce("failed_object_size", F.lit(0))
-            .cast("long")
-            .alias("failed_object_size"),
-        )
-        .orderBy("start_time")
-    )
-
-
 def dashboard_report(
     spark: SparkSession,
     stat_dir: str,
@@ -251,10 +200,9 @@ def dashboard_report(
     total_size: int | None = None,
     window_minutes: int = 60,
 ) -> dict:
-    """§3.3 serving leg, combined: the one JSON report covering BOTH
-    UICenter routes (`/totalProgress` + `/tasksGraph`,
-    `UICenter/BackEnd/server.py:10-45`) from a stat dir — the last
-    reference entry point with no runnable analogue until round 9.
+    """§3.3 serving leg: the one JSON report covering BOTH UICenter routes
+    (`/totalProgress` + `/tasksGraph`, `UICenter/BackEnd/server.py:10-45`)
+    from a stat dir written by monitor_stats.
 
       progress — the D7/D8 rollup (success/failed counts + bytes), plus
           start_time/end_time bounds, estimate_speed in bytes/min
@@ -263,12 +211,23 @@ def dashboard_report(
           the elapsed clock — deterministic, serving-time-free), and, when
           the manifest totals are supplied (the route reads them from the
           job statistics), pct_objects / pct_size / eta_seconds.
-      graph — dashboard_graph's zero-filled minute series, rendered as the
-          route's parallel arrays.
+      graph — the zero-filled per-minute series of the last
+          `window_minutes` minutes ending at the stat table's newest minute
+          (no wall clock), as the route's parallel arrays.
 
-    Driver-side state is the report itself: one 1-row agg collect + one
-    `window_minutes`-row collect."""
-    stat = spark.read.parquet(stat_dir).filter(F.col("time_unit") == 1)
+    One read of the time_unit=1 partition with the declared STAT_SCHEMA (no
+    inference job; a stat table with no rows is an empty report, a missing
+    stat_dir raises) feeds one aggregate, and the driver collects one row:
+    the totals, the bounds and the newest `window_minutes` minute rows —
+    2 Spark jobs. start_time is unique per partition (monitor_stats groups
+    by it), so those rows cover every minute of the window; the window is
+    then zero-filled in Python, as `ddbModel.returnTasksGraphData` builds
+    60 zero slots and overwrites the minutes that have a row
+    (`UICenter/BackEnd/ddbModel.py:253-275`)."""
+    if window_minutes < 1:
+        raise ValueError(f"window_minutes must be >= 1, got {window_minutes}")
+    stat = spark.read.schema(STAT_SCHEMA).parquet(stat_dir).filter(F.col("time_unit") == 1)
+    minute = F.struct("start_time", *_GRAPH_COLUMNS.values())
     row = stat.agg(
         F.sum("success_object_size").alias("success_size"),
         F.sum("success_object_num").alias("success_num"),
@@ -276,6 +235,7 @@ def dashboard_report(
         F.sum("failed_object_num").alias("failed_num"),
         F.min("start_time").alias("t_lo"),
         F.max("start_time").alias("t_hi"),
+        F.slice(F.sort_array(F.collect_list(minute), asc=False), 1, window_minutes).alias("recent"),
     ).collect()[0]
     progress = {
         "success_size": int(row["success_size"] or 0),
@@ -306,12 +266,12 @@ def dashboard_report(
         progress["eta_seconds"] = (
             round(remaining / speed * 60, 3) if speed > 0 else None
         )
-    g = dashboard_graph(spark, stat_dir, window_minutes=window_minutes).collect()
-    graph = {
-        "start_times": [int(r["start_time"]) for r in g],
-        "success_objects": [int(r["success_object_num"]) for r in g],
-        "failure_objects": [int(r["failed_object_num"]) for r in g],
-        "success_bytes": [int(r["success_object_size"]) for r in g],
-        "failure_bytes": [int(r["failed_object_size"]) for r in g],
-    }
+    hi = progress["end_time"]
+    starts = [] if hi is None else list(range(hi - 60 * (window_minutes - 1), hi + 1, 60))
+    recent = {r["start_time"]: r for r in row["recent"]}
+    zero = dict.fromkeys(_GRAPH_COLUMNS.values(), 0)
+    slots = [recent.get(t, zero) for t in starts]
+    graph = {"start_times": starts}
+    for key, col in _GRAPH_COLUMNS.items():
+        graph[key] = [int(s[col] or 0) for s in slots]
     return {"progress": progress, "graph": graph}

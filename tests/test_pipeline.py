@@ -12,8 +12,9 @@ from pyspark.sql import functions as F
 
 from s3bigdatasync_spark.operators.stats import SIZE_BUCKETS
 from s3bigdatasync_spark.plans.pipeline import (
+    STAT_SCHEMA,
     TASK_BATCH_SIZE,
-    dashboard_progress,
+    dashboard_report,
     list_producer,
     monitor_stats,
     task_executor,
@@ -58,8 +59,15 @@ def test_full_lifecycle(spark, tmp_path):
     monitor_stats(spark, copy_log, stat_dir)
     stat = spark.read.parquet(stat_dir)
     assert set(r["time_unit"] for r in stat.select("time_unit").distinct().collect()) == {1, 5, 60}
-    prog = dashboard_progress(spark, stat_dir).collect()[0]
-    assert prog["success_num"] == n_ok
+    direct = stat.filter(F.col("time_unit") == 1).agg(
+        F.sum("success_object_num").alias("success_num"),
+        F.sum("failed_object_num").alias("failed_num"),
+        F.sum("success_object_size").alias("success_size"),
+    ).collect()[0]
+    prog = dashboard_report(spark, stat_dir)["progress"]
+    assert prog["success_num"] == direct["success_num"] == n_ok
+    assert prog["failed_num"] == direct["failed_num"] == n_fail
+    assert prog["success_size"] == direct["success_size"]
     inv.unpersist()
 
 
@@ -247,3 +255,155 @@ def test_observed_waits_boundedly_and_falls_back_to_get(monkeypatch):
     monkeypatch.setattr(ops, "_OBSERVATION_WAIT_S", 0.05)
     with pytest.raises(RuntimeError, match="stuck: the action completed"):
         ops.observed(stuck, "stuck")
+
+
+# -- dashboard_report: one read, one aggregate ---------------------------------
+
+_T0 = 1_700_000_040  # a minute boundary
+# (minute offset, success_num, failed_num) of the time_unit=1 rows: about
+# four hours with gaps, failure-only minutes and one all-zero minute
+_MINUTES = [
+    (0, 3, 0), (1, 5, 1), (2, 0, 2), (7, 4, 0), (30, 1, 0), (31, 0, 0),
+    (95, 9, 3), (150, 2, 0), (151, 7, 1), (152, 0, 4), (200, 6, 0),
+    (230, 1, 1), (236, 8, 0), (237, 0, 1), (239, 5, 2),
+]
+
+
+def _gapped_stat_rows() -> list[tuple]:
+    """Stat rows in the monitor_stats shape (column order of STAT_SCHEMA).
+    The time_unit 5 and 60 rows carry large counts and end after the last
+    minute, so reading them would change both the totals and the window."""
+    rows = [
+        (_T0 + 60 * m, ok * 1_000 + m, ok, bad * 700 + m, bad, 1)
+        for m, ok, bad in _MINUTES
+    ]
+    rows += [(_T0 + 300 * i, 10**9, 10**6, 10**9, 10**6, 5) for i in range(52)]
+    rows += [(_T0 + 3600 * i, 10**9, 10**6, 10**9, 10**6, 60) for i in range(6)]
+    return rows
+
+
+def _reference_report(rows, total_objects, total_size, window_minutes) -> dict:
+    """dashboard_report computed in Python from the stat rows."""
+    ones = [r for r in rows if r[5] == 1]
+    col = lambda i: sum(r[i] for r in ones)  # noqa: E731
+    lo, hi = min(r[0] for r in ones), max(r[0] for r in ones)
+    progress = {
+        "success_size": col(1), "success_num": col(2),
+        "failed_size": col(3), "failed_num": col(4),
+        "start_time": lo, "end_time": hi,
+    }
+    speed = progress["success_size"] / ((hi - lo) / 60 + 1)
+    progress["estimate_speed"] = round(speed, 3)
+    if total_objects is not None:
+        progress["total_objects"] = total_objects
+        progress["pct_objects"] = (
+            round(100.0 * progress["success_num"] / total_objects, 3) if total_objects else None
+        )
+    if total_size is not None:
+        progress["total_size"] = total_size
+        progress["pct_size"] = (
+            round(100.0 * progress["success_size"] / total_size, 3) if total_size else None
+        )
+        remaining = max(0, total_size - progress["success_size"])
+        progress["eta_seconds"] = round(remaining / speed * 60, 3)
+    starts = [hi - 60 * i for i in reversed(range(window_minutes))]
+    by_start = {r[0]: r for r in ones}
+    slot = lambda i: [by_start[t][i] if t in by_start else 0 for t in starts]  # noqa: E731
+    graph = {
+        "start_times": starts,
+        "success_objects": slot(2), "failure_objects": slot(4),
+        "success_bytes": slot(1), "failure_bytes": slot(3),
+    }
+    return {"progress": progress, "graph": graph}
+
+
+@pytest.fixture(scope="module")
+def gapped_stat(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("gapped") / "stat")
+    rows = _gapped_stat_rows()
+    spark.createDataFrame(rows, STAT_SCHEMA).write.partitionBy("time_unit").parquet(path)
+    return path, rows
+
+
+@pytest.mark.parametrize("window_minutes", [60, 5, 300])
+@pytest.mark.parametrize("totals", ["none", "zero", "positive"])
+def test_dashboard_report_equals_python_reference(gapped_stat, spark, window_minutes, totals):
+    """The report over a gapped multi-hour stat table equals a pure-Python
+    computation from its time_unit=1 rows: a 60- and a 5-minute window,
+    and a 300-minute window longer than the table (leading zero slots),
+    each without manifest totals, with zero totals and with positive ones."""
+    path, rows = gapped_stat
+    objects, size = {
+        "none": (None, None),
+        "zero": (0, 0),
+        "positive": (200, 10**6),
+    }[totals]
+    got = dashboard_report(spark, path, objects, size, window_minutes=window_minutes)
+    assert got == _reference_report(rows, objects, size, window_minutes)
+    assert len(got["graph"]["start_times"]) == window_minutes
+    if window_minutes == 300:
+        assert got["graph"]["success_objects"][:60] == [0] * 60
+
+
+@pytest.fixture(scope="module")
+def staged_stat(spark, staged, tmp_path_factory):
+    """monitor_stats over the staged copy log."""
+    stat_dir = str(tmp_path_factory.mktemp("staged_stat") / "stat")
+    monitor_stats(spark, staged["dirs"]["log"], stat_dir)
+    return stat_dir
+
+
+def test_stat_schema_is_what_monitor_stats_writes(spark, staged_stat):
+    """dashboard_report reads with the declared STAT_SCHEMA, so it must
+    stay the schema monitor_stats writes."""
+    assert spark.read.parquet(staged_stat).dtypes == spark.createDataFrame([], STAT_SCHEMA).dtypes
+
+
+def test_dashboard_report_runs_at_most_two_spark_jobs(spark, staged, staged_stat):
+    """Job-count guard: one declared-schema read, one aggregate, one
+    collect. A schema-inference read, a second aggregate or a spine join
+    fails here."""
+    report, jobs = _in_job_group(spark, lambda: dashboard_report(spark, staged_stat))
+    assert jobs <= 2, jobs
+    n_ok, n_fail = staged["result"]
+    assert (report["progress"]["success_num"], report["progress"]["failed_num"]) == (n_ok, n_fail)
+
+
+@pytest.mark.parametrize("window_minutes", [0, -5])
+def test_dashboard_report_rejects_an_empty_window(spark, staged_stat, window_minutes):
+    """window_minutes < 1 (the CLI's --window-minutes) is a ValueError
+    raised before any Spark job."""
+
+    def call():
+        with pytest.raises(ValueError, match="window_minutes"):
+            dashboard_report(spark, staged_stat, window_minutes=window_minutes)
+
+    assert _in_job_group(spark, call)[1] == 0
+
+
+def test_dashboard_report_of_an_empty_stat_table(spark, tmp_path):
+    """A migration that has copied nothing yet: monitor_stats over an empty
+    copy log writes no data file, and the report is zero totals, no time
+    bounds and empty graph arrays. A stat dir that does not exist still
+    raises."""
+    from pyspark.errors import AnalysisException
+
+    from s3bigdatasync_spark.plans.pipeline import COPY_LOG_SCHEMA
+
+    log, stat_dir = str(tmp_path / "log"), str(tmp_path / "stat")
+    spark.createDataFrame([], COPY_LOG_SCHEMA).write.parquet(log)
+    monitor_stats(spark, log, stat_dir)
+    assert dashboard_report(spark, stat_dir, total_objects=10, total_size=1_000) == {
+        "progress": {
+            "success_size": 0, "success_num": 0, "failed_size": 0, "failed_num": 0,
+            "start_time": None, "end_time": None, "estimate_speed": 0.0,
+            "total_objects": 10, "pct_objects": 0.0,
+            "total_size": 1_000, "pct_size": 0.0, "eta_seconds": None,
+        },
+        "graph": {
+            "start_times": [], "success_objects": [], "failure_objects": [],
+            "success_bytes": [], "failure_bytes": [],
+        },
+    }
+    with pytest.raises(AnalysisException):
+        dashboard_report(spark, str(tmp_path / "missing"))
