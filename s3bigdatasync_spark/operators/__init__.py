@@ -13,22 +13,40 @@ from ..views import register_all
 
 _PREPARED: set[tuple[int, str]] = set()
 
-# --- query-scoped cache registry ---------------------------------------------
-# Several operators cache a relation their returned plan references twice
-# (both sides of a self-join, an agreement probe + a semi-join, …). The cache
-# cannot be unpersisted inside the operator — the caller materializes the
-# returned DataFrame later — so lifetimes are scoped to ONE registry query:
-# every cache is recorded here, and the registry wrapper releases the previous
-# query's caches when the next query begins. A 50-query driver session then
-# holds at most one query's caches at a time instead of accumulating dozens
-# (round-2 eviction-pressure hazard, VERDICT "What's wrong" #2).
+# --- cache lifetimes ---------------------------------------------------------
+# Two lifetimes, both process-global and released by this module:
+#
+# QUERY-SCOPED (scoped_cache, scoped_memo). Several operators cache a
+# relation their returned plan references twice (both sides of a self-join,
+# an agreement probe + a semi-join, …). The cache cannot be unpersisted
+# inside the operator — the caller materializes the returned DataFrame later
+# — so it lives for ONE registry query: every cache is recorded here, and the
+# registry wrapper releases the previous query's caches and memos
+# (release_query_caches) when the next query begins. A 50-query driver
+# session then holds at most one query's caches at a time instead of
+# accumulating dozens (round-2 eviction-pressure hazard, VERDICT "What's
+# wrong" #2).
+#
+# SNAPSHOT-SCOPED (snapshot_memo). A relation that is expensive to build,
+# small to hold, and a function of one input table only — the near-dup
+# cluster labels of `documents` — lives for one (SparkContext, sf_dir,
+# input-file snapshot). It is built once, eagerly localCheckpointed, and
+# every later query over the same unchanged files reuses it. A changed file
+# listing, another sf_dir or a new SparkContext (whose checkpoint blocks are
+# not the old ones) is a miss that replaces the slot. The registry wrapper
+# keeps these across queries; release_caches() drains both lifetimes.
 #
 # CONTRACT (one live query): construct registry query B only after
-# materializing query A's DataFrame — constructing B releases A's caches, so
-# A would still be correct (recompute is deterministic) but lose the
-# shared-subtree dedup the caches exist for. The driver and pytest both
-# construct-then-materialize serially; the lock below only makes the list
-# mutation safe under concurrent construction, it does not lift the contract.
+# materializing query A's DataFrame — constructing B releases A's
+# query-scoped caches, so A would still be correct (recompute is
+# deterministic) but lose the shared-subtree dedup the caches exist for.
+# Snapshot-scoped entries are checkpoints, not caches: a DataFrame built on
+# one stays valid after its slot is replaced (the blocks go with the last
+# reference), but not after release_caches(), which unpersists them. The
+# driver and pytest both construct-then-materialize serially; the locks
+# below only make the bookkeeping safe under concurrent construction, they
+# do not lift the contract.
+import os
 import threading
 import time
 
@@ -66,8 +84,70 @@ def scoped_memo(key, builder):
         return _SCOPED_MEMO.setdefault(key, df)
 
 
-def release_caches() -> int:
-    """Unpersist every scoped cache from the previous query. Returns count."""
+# name -> (snapshot key, value); one slot per name
+_SNAPSHOT: dict = {}
+# name -> lock held while that slot builds, so concurrent constructions
+# (sql_views' thread pool) wait for one build instead of racing N of them
+_SNAPSHOT_BUILD: dict = {}
+
+
+def resolved_dir(path: str) -> str:
+    """One key per directory however it is spelled: local paths are
+    resolved (relative, `..`, symlinks, trailing slash); a URI (`s3a://…`)
+    only loses its trailing slash, since realpath would mangle it."""
+    if "://" in path:
+        return path.rstrip("/")
+    return os.path.realpath(path)
+
+
+def snapshot_key(spark: SparkSession, sf_dir: str):
+    """(applicationId, resolved sf_dir, ((file, length, mtime), …)) of the
+    registered `documents` view, or None when it reads no files (an
+    in-memory relation has no listing to key on). The files come from the
+    view's own file index and their length and modification time from the
+    Hadoop FileSystem (so `s3a://` works) — driver-side calls only, no Spark
+    job."""
+    files = sorted(spark.table("documents").inputFiles())
+    if not files:
+        return None
+    sc = spark.sparkContext
+    conf = sc._jsc.hadoopConfiguration()
+    listing = []
+    for f in files:
+        path = sc._jvm.org.apache.hadoop.fs.Path(f)
+        st = path.getFileSystem(conf).getFileStatus(path)
+        listing.append((f, st.getLen(), st.getModificationTime()))
+    return (sc.applicationId, resolved_dir(sf_dir), tuple(listing))
+
+
+def snapshot_memo(name: str, spark: SparkSession, sf_dir: str, builder):
+    """builder()'s value for the lifetime of one snapshot of the `documents`
+    files (see snapshot_key): the first call per snapshot builds, later calls
+    return the stored value. The value must depend on nothing but
+    `documents` and must already be materialized (an eager
+    localCheckpoint), so that it survives release_query_caches. A new key
+    replaces the slot — the old entry is dropped before the build so its
+    checkpoint can be collected. A view without a file listing is never
+    stored: every call builds."""
+    key = snapshot_key(prepared(spark, sf_dir), sf_dir)
+    if key is None:
+        return builder()
+    with _SCOPED_LOCK:
+        lock = _SNAPSHOT_BUILD.setdefault(name, threading.Lock())
+    with lock:
+        with _SCOPED_LOCK:
+            if name in _SNAPSHOT and _SNAPSHOT[name][0] == key:
+                return _SNAPSHOT[name][1]
+            _SNAPSHOT.pop(name, None)
+        value = builder()
+        with _SCOPED_LOCK:
+            _SNAPSHOT[name] = (key, value)
+        return value
+
+
+def release_query_caches() -> int:
+    """Unpersist every query-scoped cache and clear the query-scoped memo;
+    snapshot-scoped entries stay. Returns the number of caches released."""
     with _SCOPED_LOCK:
         drained, _SCOPED_CACHES[:] = _SCOPED_CACHES[:], []
         _SCOPED_MEMO.clear()
@@ -79,6 +159,41 @@ def release_caches() -> int:
         except Exception:
             pass  # session already stopped — nothing to release
     return n
+
+
+def _unpersist_checkpoints(df) -> int:
+    """Unpersist the checkpointed RDDs a DataFrame scans (the LogicalRDD
+    leaves of its plan). Returns how many."""
+    n = 0
+    leaves = df._jdf.queryExecution().logical().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
+            n += 1
+    return n
+
+
+def release_caches() -> int:
+    """Release both lifetimes: the query-scoped caches and memos, and every
+    snapshot-scoped entry, whose checkpoint blocks are unpersisted here and
+    now rather than whenever the ContextCleaner collects the last reference
+    (a poll of the persistent-RDD map pins what it lists until Python's GC
+    detaches it, so a collector-timed release can lag indefinitely). So a
+    DataFrame built on a snapshot entry must be materialized before this
+    call; the registry wrapper never calls it (release_query_caches), and
+    construct-then-materialize callers never see the difference. Returns the
+    number of caches and checkpoints released."""
+    with _SCOPED_LOCK:
+        drained = [value for _, value in _SNAPSHOT.values()]
+        _SNAPSHOT.clear()
+    n = 0
+    for df in drained:
+        try:
+            n += _unpersist_checkpoints(df)
+        except Exception:
+            pass  # session already stopped — nothing to release
+    return n + release_query_caches()
 
 
 _OBSERVATION_WAIT_S = 120.0

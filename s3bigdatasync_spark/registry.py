@@ -24,7 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .plans import llm_corpus
-from .operators import release_caches
+from .operators import release_query_caches
 from .operators import (
     analytics,
     behavior,
@@ -92,18 +92,22 @@ DRIVER_CAP = 50
 
 
 def _scoped(fn: Callable) -> Callable:
-    """Release the PREVIOUS query's scoped caches before building this one.
+    """Release the PREVIOUS query's query-scoped caches and memos before
+    building this one.
 
     Lazy release (at next-query construction, not at completion) because the
     caller materializes the returned DataFrame after the function returns;
     unpersisting earlier would recompute the shared subtrees the cache exists
-    for. Inner composition (packs calling member functions, operators calling
-    operators) goes through the unwrapped module functions, so a release
-    happens exactly once per top-level registry query."""
+    for. Snapshot-scoped entries (the near-dup cluster labels) are kept: they
+    are checkpoints of one input snapshot, so the next query over the same
+    files reuses them. Inner composition (packs calling member functions,
+    operators calling operators) goes through the unwrapped module
+    functions, so a release happens exactly once per top-level registry
+    query."""
 
     @functools.wraps(fn)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        release_caches()
+        release_query_caches()
         return fn(spark, sf_dir)
 
     return run
@@ -123,8 +127,12 @@ def full_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     One-live-query contract: materialize each returned DataFrame before
     constructing the next query — construction releases the previous query's
-    scoped caches (see operators._SCOPED_CACHES). Violating it is safe but
-    slow: results stay deterministic, the shared-subtree caching is lost."""
+    query-scoped caches (see operators._SCOPED_CACHES). Violating it is safe
+    but slow: results stay deterministic, the shared-subtree caching is lost.
+    Snapshot-scoped entries outlive the query: every clustering query over
+    the same documents files reuses one set of cluster labels until the
+    files change, the SparkContext restarts or operators.release_caches()
+    drains them."""
     out = _merge(_MODULES, "QUERIES")
     out.update({n: _scoped(f) for n, f in packs.QUERIES.items()})
     return out
@@ -143,8 +151,8 @@ def raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     model-training collects repeated per query once memos are released)
     shares trained state across queries. Violating the one-live-query
     contract is documented safe-but-slow for EXECUTION; for bulk
-    CONSTRUCTION it is the fast path — callers release once at the end
-    (operators.release_caches)."""
+    CONSTRUCTION it is the fast path — callers release the query scope once
+    at the end (operators.release_query_caches)."""
     out: dict = {}
     for m in _MODULES:
         for name, v in getattr(m, "QUERIES", {}).items():

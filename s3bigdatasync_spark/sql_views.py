@@ -67,7 +67,7 @@ def register_query_views(
                     raw[name](spark, sf_dir).createOrReplaceTempView(view)
                 names.append(view)
         finally:
-            operators.release_caches()
+            operators.release_query_caches()
         return names
     key = (id(spark), sf_dir)
     if not force and key in _REGISTERED:
@@ -107,12 +107,14 @@ def register_query_views(
 
     # try/finally (round-10 ADVICE): if any build() raises, the scoped
     # caches accumulated across the ~185 raw constructions must still be
-    # released — otherwise every one of them leaks into the session.
+    # released — otherwise every one of them leaks into the session. Only
+    # the query scope: the views read snapshot-scoped entries (the near-dup
+    # cluster labels), which must outlive registration.
     try:
         with ThreadPoolExecutor(max_workers=8) as ex:
             names = list(ex.map(build, registry.raw_queries().items()))
     finally:
-        operators.release_caches()
+        operators.release_query_caches()
     _REGISTERED.clear()  # one sf_dir's views live in the catalog at a time
     _REGISTERED[key] = names
     return names

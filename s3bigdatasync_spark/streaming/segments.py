@@ -68,12 +68,12 @@ is now assembled from per-segment partials at read time.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import resolved_dir
 from .drift import _read_meta, _scan_latest_complete  # shared protocol core
 from .localrel import local_rel
 
@@ -84,19 +84,10 @@ _MANIFEST_SCHEMA = "seg string, tier int, n_rows long"
 _FILES_SCHEMA = "file_path string"
 _SEG_PREFIXES = ("manifest", "files")
 
-# _writer_key(state_dir) -> the token of the writer allowed to flip it (see
+# resolved_dir(state_dir) -> the token of the writer allowed to flip it (see
 # the single-writer contract note inside segmented_count_sink). Keyed per
 # driver process; never cleaned up — a handful of object() sentinels.
 _ACTIVE_WRITERS: dict[str, object] = {}
-
-
-def _writer_key(state_dir: str) -> str:
-    """One key per directory however it is spelled: local paths are
-    resolved (relative, `..`, symlinks, trailing slash); a URI (`s3a://…`)
-    only loses its trailing slash, since realpath would mangle it."""
-    if "://" in state_dir:
-        return state_dir.rstrip("/")
-    return os.path.realpath(state_dir)
 
 
 def _key_names(counts_schema: str) -> list[str]:
@@ -300,7 +291,7 @@ def segmented_count_sink(
     # the per-batch overhead the r11 cut removed.
     last_flipped: dict[str, int] = {}
     token = object()
-    writer_key = _writer_key(state_dir)
+    writer_key = resolved_dir(state_dir)
     _ACTIVE_WRITERS[writer_key] = token
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
