@@ -3,98 +3,71 @@
 The reference streams monitor rows through three concurrent hand-rolled
 tumbling buckets (TaskMonitor/s3_monitor_statistic.py:177-207, 250-301) and
 upserts closed buckets into DynamoDB with a clobber-on-rerun PUT (59-68).
-Here each granularity is a declarative tumbling-window groupBy; the
-multi-granularity stat is a single union (Spark shares the scan via
-whole-stage codegen; at scale the three aggs are map-side partial + one
-small shuffle each, keyed by (window, status) — low cardinality, no skew).
+
+This module owns the stat-table format: STAT_SCHEMA, the four conditional
+sums of a stat row (`stat_sums`) and the batch kernel `stat_rollup`, which
+explodes each copy-log row into its time units and aggregates them in one
+groupBy(time_unit, start_time) — one scan and one small shuffle for all
+granularities (map-side partial aggregation; a few rows per bucket, no
+skew). Every stat table is built from them: `time_rollup` and
+`hwm_incremental` here, `plans.pipeline.monitor_stats` (the batch leg,
+written partitioned by time_unit) and `streaming.monitor` (the watermarked
+leg, which groups by `F.window` instead because append mode needs it), so
+`plans.pipeline.dashboard_report` reads either stat dir.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import prepared
 from ..views import oracle_cte
 
 TIME_UNITS = (1, 5, 60)  # minutes — TaskMonitor/ddb.yaml:85-109
+# one stat row per (time_unit, start_time); start_time is the window start in
+# epoch seconds (bigint — portable, tz-free)
+STAT_SCHEMA = (
+    "start_time long, success_object_size long, success_object_num long, "
+    "failed_object_size long, failed_object_num long, time_unit int"
+)
 
 
-def _bucketed(log: DataFrame, minutes: int) -> DataFrame:
-    """Tumbling-window agg at one granularity; window start as epoch seconds
-    (bigint — portable, tz-free)."""
-    secs = minutes * 60
-    start = (F.col("replication_time").cast("long") / secs).cast("long") * secs
-    # cast(double as long) truncates in Spark; inputs are positive so this is
-    # floor-division, matching the oracle's // operator.
-    return (
-        log.withColumn("start_time", start)
-        .groupBy("start_time")
-        .agg(
-            F.sum(F.when(F.col("replication_status") == 1, F.col("size")).otherwise(0)).alias(
-                "success_object_size"
-            ),
-            F.sum(F.when(F.col("replication_status") == 1, 1).otherwise(0)).alias(
-                "success_object_num"
-            ),
-            F.sum(F.when(F.col("replication_status") == 0, F.col("size")).otherwise(0)).alias(
-                "failed_object_size"
-            ),
-            F.sum(F.when(F.col("replication_status") == 0, 1).otherwise(0)).alias(
-                "failed_object_num"
-            ),
-        )
-        .withColumn("time_unit", F.lit(minutes))
-    )
+def stat_sums() -> list[Column]:
+    """The four stat columns as sums over copy-log rows
+    (replication_status 1 = copied, 0 = failed)."""
+    ok = F.col("replication_status") == 1
+    failed = F.col("replication_status") == 0
+    return [
+        F.sum(F.when(ok, F.col("size")).otherwise(0)).alias("success_object_size"),
+        F.sum(F.when(ok, 1).otherwise(0)).alias("success_object_num"),
+        F.sum(F.when(failed, F.col("size")).otherwise(0)).alias("failed_object_size"),
+        F.sum(F.when(failed, 1).otherwise(0)).alias("failed_object_num"),
+    ]
 
 
-_STAT_COLS = [
-    "time_unit",
-    "start_time",
-    "success_object_size",
-    "success_object_num",
-    "failed_object_size",
-    "failed_object_num",
-]
-
-
-def time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D4: the 1/5/60-minute stat table (≙ GROUPING SETS over window
-    granularities).
-
-    One scan, one shuffle: each row is exploded into its three granularities
-    and aggregated by (time_unit, bucket) in a single groupBy — a union of
-    three per-granularity aggs would scan the source three times, which at
-    100 TB is 3x the I/O for identical output.
-    """
-    log = prepared(spark, sf_dir).table("copy_log")
+def stat_rollup(log: DataFrame, units: tuple[int, ...] = TIME_UNITS) -> DataFrame:
+    """copy-log rows → stat rows (time_unit, start_time, the stat_sums) at
+    each granularity in `units` (minutes): each row is exploded into its
+    units and aggregated in a single groupBy — a union of per-unit aggs would
+    scan the source once per unit for identical output."""
     exploded = log.select(
         "replication_time",
         "replication_status",
         "size",
-        F.explode(F.array(*[F.lit(m) for m in TIME_UNITS])).alias("time_unit"),
+        F.explode(F.array(*[F.lit(m) for m in units])).alias("time_unit"),
     )
     secs = F.col("time_unit").cast("long") * 60
+    # cast(double as long) truncates in Spark; inputs are positive so this is
+    # floor-division, matching the oracle's // operator.
     start = (F.col("replication_time").cast("long") / secs).cast("long") * secs
-    return (
-        exploded.withColumn("start_time", start)
-        .groupBy("time_unit", "start_time")
-        .agg(
-            F.sum(F.when(F.col("replication_status") == 1, F.col("size")).otherwise(0)).alias(
-                "success_object_size"
-            ),
-            F.sum(F.when(F.col("replication_status") == 1, 1).otherwise(0)).alias(
-                "success_object_num"
-            ),
-            F.sum(F.when(F.col("replication_status") == 0, F.col("size")).otherwise(0)).alias(
-                "failed_object_size"
-            ),
-            F.sum(F.when(F.col("replication_status") == 0, 1).otherwise(0)).alias(
-                "failed_object_num"
-            ),
-        )
-        .select(*_STAT_COLS)
-    )
+    return exploded.groupBy("time_unit", start.alias("start_time")).agg(*stat_sums())
+
+
+def time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """D4: the 1/5/60-minute stat table (≙ GROUPING SETS over window
+    granularities), one scan and one shuffle via stat_rollup."""
+    return stat_rollup(prepared(spark, sf_dir).table("copy_log"))
 
 
 def _rollup_unit_sql(minutes: int) -> str:
@@ -130,7 +103,7 @@ def hwm_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail = log.crossJoin(F.broadcast(hwm)).filter(
         F.col("replication_time").cast("long") >= F.col("hwm")
     )
-    return _bucketed(tail, 1).select(*_STAT_COLS)
+    return stat_rollup(tail, (1,))
 
 
 _HWM_SQL = oracle_cte("copy_log") + """

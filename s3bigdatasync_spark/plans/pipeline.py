@@ -28,16 +28,13 @@ from pyspark.sql import functions as F
 
 from ..operators import observed
 from ..operators.stats import size_stats_exprs
+from ..operators.windows import STAT_SCHEMA, stat_rollup
 
 TASK_BATCH_SIZE = 100  # objects per task file ≙ message_body_max_num (ListProducer.py:17)
 
 TASK_SCHEMA = "bucket string, dst_bucket string, key string, size long"
 COPY_LOG_SCHEMA = (
     "object_key string, replication_time timestamp, replication_status long, size long"
-)
-STAT_SCHEMA = (
-    "start_time long, success_object_size long, success_object_num long, "
-    "failed_object_size long, failed_object_num long, time_unit int"
 )
 # dashboard_report's graph arrays and the stat column each one reads
 _GRAPH_COLUMNS = {
@@ -168,29 +165,14 @@ def task_executor(
 
 
 def monitor_stats(spark: SparkSession, copy_log_dir: str, stat_dir: str) -> None:
-    """§3.3 batch leg: 1/5/60-minute rollup of copy_log → stat table
-    (STAT_SCHEMA) partitioned by time_unit (the D4 shape; streaming variant
-    in streaming.monitor)."""
-    log = spark.read.parquet(copy_log_dir)
-    parts = []
-    for minutes in (1, 5, 60):
-        secs = minutes * 60
-        start = (F.col("replication_time").cast("long") / secs).cast("long") * secs
-        parts.append(
-            log.withColumn("start_time", start)
-            .groupBy("start_time")
-            .agg(
-                F.sum(F.when(F.col("replication_status") == 1, F.col("size")).otherwise(0)).alias("success_object_size"),
-                F.sum(F.when(F.col("replication_status") == 1, 1).otherwise(0)).alias("success_object_num"),
-                F.sum(F.when(F.col("replication_status") == 0, F.col("size")).otherwise(0)).alias("failed_object_size"),
-                F.sum(F.when(F.col("replication_status") == 0, 1).otherwise(0)).alias("failed_object_num"),
-            )
-            .withColumn("time_unit", F.lit(minutes))
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.write.mode("overwrite").partitionBy("time_unit").parquet(stat_dir)
+    """§3.3 batch leg: copy_log → the 1/5/60-minute stat table (STAT_SCHEMA,
+    unique per (time_unit, start_time)), overwritten partitioned by
+    time_unit. A declared-schema read (no inference job; an int32
+    replication_status is widened to long) feeds the shared
+    operators.windows.stat_rollup kernel and one write: 2 Spark jobs. The
+    watermarked streaming leg (streaming.monitor) writes the same shape."""
+    log = spark.read.schema(COPY_LOG_SCHEMA).parquet(copy_log_dir)
+    stat_rollup(log).write.mode("overwrite").partitionBy("time_unit").parquet(stat_dir)
 
 
 def dashboard_report(
@@ -202,7 +184,7 @@ def dashboard_report(
 ) -> dict:
     """§3.3 serving leg: the one JSON report covering BOTH UICenter routes
     (`/totalProgress` + `/tasksGraph`, `UICenter/BackEnd/server.py:10-45`)
-    from a stat dir written by monitor_stats.
+    from a stat dir written by monitor_stats or streaming.monitor.
 
       progress — the D7/D8 rollup (success/failed counts + bytes), plus
           start_time/end_time bounds, estimate_speed in bytes/min
@@ -219,8 +201,9 @@ def dashboard_report(
     inference job; a stat table with no rows is an empty report, a missing
     stat_dir raises) feeds one aggregate, and the driver collects one row:
     the totals, the bounds and the newest `window_minutes` minute rows —
-    2 Spark jobs. start_time is unique per partition (monitor_stats groups
-    by it), so those rows cover every minute of the window; the window is
+    2 Spark jobs. start_time is unique per partition (monitor_stats and the
+    streaming leg both write one row per (time_unit, start_time)), so those
+    rows cover every minute of the window; the window is
     then zero-filled in Python, as `ddbModel.returnTasksGraphData` builds
     60 zero slots and overwrites the minutes that have a row
     (`UICenter/BackEnd/ddbModel.py:253-275`)."""

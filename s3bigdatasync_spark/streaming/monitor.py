@@ -13,48 +13,41 @@ Spark-native fix is exactly the built-in machinery:
   into an idempotent sink);
 * maxFilesPerTrigger is the backpressure knob (≙ the reference's queue
   high-watermark 1000, AzureEtagCheck/mpmgr.py:139-145).
+
+The stream reads the copy log with the pipeline's COPY_LOG_SCHEMA and emits
+the batch stat table's rows (operators.windows: STAT_SCHEMA, stat_sums), so
+plans.pipeline.dashboard_report reads a streamed stat dir unchanged. A
+checkpoint or stat dir written by the older (status, total_size, total_num)
+shape of this stream must not be reused (a declared-schema read finds none
+of the stat columns in the old files, reads them as null, and
+dashboard_report reports zero): delete both and rebuild them from the copy
+log.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
-COPY_LOG_SCHEMA = StructType(
-    [
-        StructField("object_key", StringType()),
-        StructField("replication_time", TimestampType()),
-        StructField("replication_status", IntegerType()),
-        StructField("size", LongType()),
-    ]
-)
+from ..operators.windows import STAT_SCHEMA, stat_rollup, stat_sums
+from ..plans.pipeline import COPY_LOG_SCHEMA
 
 WATERMARK_DELAY = "10 minutes"
 
 
 def _windowed_stat(stream: DataFrame, minutes: int) -> DataFrame:
-    return (
+    """stat rows at one time unit; append mode needs the grouping on the
+    watermarked column's window (a start_time computed from it would not
+    carry the watermark)."""
+    stat = (
         stream.withWatermark("replication_time", WATERMARK_DELAY)
-        .groupBy(
-            F.window("replication_time", f"{minutes} minutes").alias("w"),
-            F.col("replication_status").alias("status"),
-        )
-        .agg(F.sum("size").alias("total_size"), F.count("*").alias("total_num"))
-        .select(
-            F.lit(minutes).alias("time_unit"),
-            F.col("w.start").cast("long").alias("start_time"),
-            "status",
-            "total_size",
-            "total_num",
-        )
+        .groupBy(F.window("replication_time", f"{minutes} minutes").alias("w"))
+        .agg(*stat_sums())
+    )
+    return stat.select(
+        F.lit(minutes).alias("time_unit"),
+        F.col("w.start").cast("long").alias("start_time"),
+        *stat.columns[1:],
     )
 
 
@@ -69,8 +62,9 @@ def stream_time_rollup(
     """Start the streaming stat job; returns the StreamingQuery.
 
     foreachBatch writes each micro-batch's closed windows to a parquet stat
-    table partitioned by time_unit — append of finalized windows (watermark
-    guarantees no window is emitted twice in update=False append mode).
+    table partitioned by time_unit — append of finalized windows (the
+    watermark guarantees no (time_unit, start_time) row is emitted twice in
+    append mode). Rows hold STAT_SCHEMA at the one time unit `minutes`.
     """
     stream = (
         spark.readStream.schema(COPY_LOG_SCHEMA)
@@ -96,29 +90,16 @@ def stream_time_rollup(
 
 
 def read_stats(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The exactly-once view of the stat table: full-row distinct() —
-    (time_unit, start_time, status) is unique in committed output (append
-    mode emits each closed window once) and crash-replayed rows are
-    byte-identical, so this removes only replay re-appends. See
+    """The exactly-once view of the stat table: a declared STAT_SCHEMA read,
+    full-row distinct() — (time_unit, start_time) is unique in committed
+    output (append mode emits each closed window once) and crash-replayed
+    rows are byte-identical, so this removes only replay re-appends. See
     ack_join.read_matches for the reader-contract rationale."""
-    return spark.read.parquet(out_dir).distinct()
+    return spark.read.schema(STAT_SCHEMA).parquet(out_dir).distinct()
 
 
 def batch_equivalent(spark: SparkSession, copy_log_dir: str, minutes: int = 1) -> DataFrame:
     """The batch query the stream must converge to (parity oracle for tests:
-    run the stream over incremental appends, compare to this)."""
-    log = spark.read.schema(COPY_LOG_SCHEMA).parquet(copy_log_dir)
-    return (
-        log.groupBy(
-            F.window("replication_time", f"{minutes} minutes").alias("w"),
-            F.col("replication_status").alias("status"),
-        )
-        .agg(F.sum("size").alias("total_size"), F.count("*").alias("total_num"))
-        .select(
-            F.lit(minutes).alias("time_unit"),
-            F.col("w.start").cast("long").alias("start_time"),
-            "status",
-            "total_size",
-            "total_num",
-        )
-    )
+    run the stream over incremental appends, compare to this): the batch
+    kernel at the one time unit `minutes`."""
+    return stat_rollup(spark.read.schema(COPY_LOG_SCHEMA).parquet(copy_log_dir), (minutes,))

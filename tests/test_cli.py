@@ -207,7 +207,14 @@ def test_monitor_stream_subcommand(spark, tmp_path, capsys):
     assert run(spark, *args) == 0
 
     out = spark.read.parquet(stat)
-    assert out.count() >= 3  # the three early (window, status) groups closed
+    # the two early minutes closed, one stat row each; the log's int32
+    # replication_status is read as the declared long
+    got = [
+        (r["success_object_size"], r["success_object_num"],
+         r["failed_object_size"], r["failed_object_num"])
+        for r in out.orderBy("start_time").collect()
+    ]
+    assert got == [(100, 1, 50, 1), (10, 1, 0, 0)]
     assert {r["time_unit"] for r in out.select("time_unit").distinct().collect()} == {1}
 
 

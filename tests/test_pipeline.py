@@ -4,6 +4,7 @@ dashboard, all on temp dirs."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 
@@ -11,7 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from s3bigdatasync_spark.operators.stats import SIZE_BUCKETS
+from s3bigdatasync_spark.operators.windows import TIME_UNITS
 from s3bigdatasync_spark.plans.pipeline import (
+    COPY_LOG_SCHEMA,
     STAT_SCHEMA,
     TASK_BATCH_SIZE,
     dashboard_report,
@@ -19,6 +22,7 @@ from s3bigdatasync_spark.plans.pipeline import (
     monitor_stats,
     task_executor,
 )
+from s3bigdatasync_spark.streaming.monitor import read_stats, stream_time_rollup
 
 
 def test_full_lifecycle(spark, tmp_path):
@@ -388,8 +392,6 @@ def test_dashboard_report_of_an_empty_stat_table(spark, tmp_path):
     raises."""
     from pyspark.errors import AnalysisException
 
-    from s3bigdatasync_spark.plans.pipeline import COPY_LOG_SCHEMA
-
     log, stat_dir = str(tmp_path / "log"), str(tmp_path / "stat")
     spark.createDataFrame([], COPY_LOG_SCHEMA).write.parquet(log)
     monitor_stats(spark, log, stat_dir)
@@ -407,3 +409,105 @@ def test_dashboard_report_of_an_empty_stat_table(spark, tmp_path):
     }
     with pytest.raises(AnalysisException):
         dashboard_report(spark, str(tmp_path / "missing"))
+
+
+# -- one stat rollup: batch and stream write one stat-table shape -------------
+
+_STAT_COLS = [
+    "time_unit",
+    "start_time",
+    "success_object_size",
+    "success_object_num",
+    "failed_object_size",
+    "failed_object_num",
+]
+
+
+def _spread_log_rows() -> list[tuple]:
+    """Copy-log rows over ~3 hours: gaps, and minutes with only copies or
+    only failures."""
+    t0 = dt.datetime(2024, 1, 15, 6, 58, 30)
+    return [
+        (f"k{i}", t0 + dt.timedelta(seconds=i * 37 % 11_000), int(i % 7 != 3), 1_000 + 13 * i)
+        for i in range(600)
+    ]
+
+
+def _reference_stat(rows) -> list[tuple]:
+    """The stat rows computed in Python from copy-log rows."""
+    acc: dict[tuple, list[int]] = {}
+    for _, ts, status, size in rows:
+        sec = int(ts.timestamp())
+        for unit in TIME_UNITS:
+            sums = acc.setdefault((unit, sec // (60 * unit) * 60 * unit), [0, 0, 0, 0])
+            i = 0 if status == 1 else 2
+            sums[i] += size
+            sums[i + 1] += 1
+    return sorted((*key, *sums) for key, sums in acc.items())
+
+
+def test_monitor_stats_equals_python_reference_in_two_jobs(spark, tmp_path):
+    """monitor_stats is one declared-schema read, the stat_rollup kernel and
+    one partitioned write: at most 2 Spark jobs (a union of per-unit
+    group-bys ran 5), and its rows at every time unit equal the rollup
+    computed in Python."""
+    rows = _spread_log_rows()
+    log, stat_dir = str(tmp_path / "log"), str(tmp_path / "stat")
+    spark.createDataFrame(rows, COPY_LOG_SCHEMA).write.parquet(log)
+    _, jobs = _in_job_group(spark, lambda: monitor_stats(spark, log, stat_dir))
+    assert jobs <= 2, jobs
+    got = spark.read.schema(STAT_SCHEMA).parquet(stat_dir).select(*_STAT_COLS).collect()
+    assert sorted(map(tuple, got)) == _reference_stat(rows)
+
+
+@pytest.fixture(scope="module")
+def streamed(spark, staged, tmp_path_factory):
+    """The staged task_executor log plus one row an hour after it (which
+    moves the watermark past every staged minute), rolled up by
+    monitor_stats and by the stream; returns the two stat dirs and the
+    newest window the stream closed."""
+    import shutil
+
+    root = tmp_path_factory.mktemp("streamed")
+    log = str(root / "log")
+    shutil.copytree(staged["dirs"]["log"], log)
+    t_max = spark.read.parquet(log).agg(F.max("replication_time")).collect()[0][0]
+    flush = [("flush", t_max + dt.timedelta(hours=1), 1, 7)]
+    spark.createDataFrame(flush, COPY_LOG_SCHEMA).write.mode("append").parquet(log)
+    dirs = {"batch": str(root / "batch"), "stream": str(root / "stream")}
+    monitor_stats(spark, log, dirs["batch"])
+    stream_time_rollup(spark, log, dirs["stream"], str(root / "ckpt")).awaitTermination(120)
+    closed = spark.read.parquet(dirs["stream"]).agg(F.max("start_time")).collect()[0][0]
+    return dirs, closed
+
+
+def test_stream_over_a_task_executor_log_equals_monitor_stats(spark, staged, streamed):
+    """The stream reads a real copy log (long replication_status) and its
+    closed windows are monitor_stats' time_unit=1 rows, row for row."""
+    dirs, closed = streamed
+    assert closed is not None, "stream emitted nothing"
+    got = read_stats(spark, dirs["stream"]).select(*_STAT_COLS)
+    want = (
+        spark.read.schema(STAT_SCHEMA).parquet(dirs["batch"])
+        .filter((F.col("time_unit") == 1) & (F.col("start_time") <= closed))
+        .select(*_STAT_COLS)
+    )
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    n_ok, n_fail = staged["result"]
+    totals = got.agg(F.sum("success_object_num"), F.sum("failed_object_num")).collect()[0]
+    assert tuple(totals) == (n_ok, n_fail)  # every staged minute closed
+
+
+def test_dashboard_report_reads_either_stat_table(spark, staged, streamed, tmp_path):
+    """dashboard_report over the streamed stat dir equals the report over
+    monitor_stats' dir cut to the windows the watermark has closed."""
+    dirs, closed = streamed
+    cut = str(tmp_path / "cut")
+    spark.read.parquet(dirs["batch"]).filter(F.col("start_time") <= closed).write.partitionBy(
+        "time_unit"
+    ).parquet(cut)
+    stats = staged["job"]["statistics"]
+    totals = (stats["total_objects"], stats["total_size_bytes"])
+    report = dashboard_report(spark, dirs["stream"], *totals)
+    assert report == dashboard_report(spark, cut, *totals)
+    assert report["progress"]["success_num"] == staged["result"][0]

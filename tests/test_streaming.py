@@ -8,11 +8,19 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from s3bigdatasync_spark.streaming.monitor import (
-    COPY_LOG_SCHEMA,
-    batch_equivalent,
-    stream_time_rollup,
-)
+from s3bigdatasync_spark.operators.windows import stat_rollup
+from s3bigdatasync_spark.plans.pipeline import COPY_LOG_SCHEMA
+from s3bigdatasync_spark.streaming.monitor import batch_equivalent, stream_time_rollup
+
+# the stat-table columns in kernel order (a partitioned read-back reorders)
+COLS = [
+    "time_unit",
+    "start_time",
+    "success_object_size",
+    "success_object_num",
+    "failed_object_size",
+    "failed_object_num",
+]
 
 
 def _mk_rows(start_min: int, n: int):
@@ -48,9 +56,8 @@ def test_stream_converges_to_batch(spark, tmp_path):
 
     # append-mode with watermark emits only closed windows; rows newer than
     # (max_event - watermark) are still in state. Compare on the closed span.
-    cols = ["time_unit", "start_time", "status", "total_size", "total_num"]
-    got = spark.read.parquet(out_dir).select(*cols)  # partitioned read-back reorders
-    expected = batch_equivalent(spark, log_dir, minutes=1).select(*cols)
+    got = spark.read.parquet(out_dir).select(*COLS)
+    expected = batch_equivalent(spark, log_dir, minutes=1).select(*COLS)
     max_closed = got.agg(F.max("start_time")).collect()[0][0]
     assert max_closed is not None, "stream emitted nothing"
     exp_rows = sorted(
@@ -98,14 +105,13 @@ def test_stream_parity_at_sf01_scale(spark, tmp_path):
         )
         q.awaitTermination(300)
 
-    cols = ["time_unit", "start_time", "status", "total_size", "total_num"]
-    got = spark.read.parquet(out_dir).select(*cols)
+    got = spark.read.parquet(out_dir).select(*COLS)
     max_closed = got.agg(F.max("start_time")).collect()[0][0]
     assert max_closed is not None
     expected = (
         batch_equivalent(spark, log_dir, minutes=5)
         .filter(F.col("start_time") <= max_closed)
-        .select(*cols)
+        .select(*COLS)
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expected.collect()))
 
@@ -156,10 +162,9 @@ def test_late_data_beyond_watermark_is_dropped(spark, tmp_path):
     q = stream_time_rollup(spark, log_dir, out_dir, ckpt, minutes=1, max_files_per_trigger=1)
     q.awaitTermination(120)
 
-    cols = ["time_unit", "start_time", "status", "total_size", "total_num"]
-    got = spark.read.parquet(out_dir).select(*cols)
-    # no (start_time, status) key may appear twice: closed windows are final
-    dup = got.groupBy("start_time", "status").count().filter(F.col("count") > 1)
+    got = spark.read.parquet(out_dir).select(*COLS)
+    # no (time_unit, start_time) key may appear twice: closed windows are final
+    dup = got.groupBy("time_unit", "start_time").count().filter(F.col("count") > 1)
     assert dup.count() == 0
     # emitted aggregates equal the batch rollup over every NON-late row,
     # restricted to closed windows: the 15 late rows are dropped (their
@@ -170,18 +175,7 @@ def test_late_data_beyond_watermark_is_dropped(spark, tmp_path):
     non_late = spark.createDataFrame(batch_a + fresh + flush, COPY_LOG_SCHEMA)
     expected = sorted(
         tuple(r)
-        for r in non_late.groupBy(
-            F.window("replication_time", "1 minutes").alias("w"),
-            F.col("replication_status").alias("status"),
-        )
-        .agg(F.sum("size").alias("total_size"), F.count("*").alias("total_num"))
-        .select(
-            F.lit(1).alias("time_unit"),
-            F.col("w.start").cast("long").alias("start_time"),
-            "status",
-            "total_size",
-            "total_num",
-        )
+        for r in stat_rollup(non_late, (1,))
         .filter(F.col("start_time") <= max_closed)
         .collect()
     )
@@ -253,39 +247,25 @@ def test_stream_parity_at_sf01_with_late_tercile(spark, tmp_path):
     ).parquet(log_dir)
     drain()
 
-    cols = ["time_unit", "start_time", "status", "total_size", "total_num"]
-    got = spark.read.parquet(out_dir).select(*cols)
-    # closed windows are final: no (window, status) key appears twice
+    got = spark.read.parquet(out_dir).select(*COLS)
+    # closed windows are final: no (time_unit, start_time) key appears twice
     assert (
-        got.groupBy("start_time", "status").count().filter(F.col("count") > 1).count()
+        got.groupBy("time_unit", "start_time").count().filter(F.col("count") > 1).count()
         == 0
     )
     max_closed = got.agg(F.max("start_time")).collect()[0][0]
     on_time = early.unionByName(recent).unionByName(
         spark.createDataFrame(flush, COPY_LOG_SCHEMA)
     )
-    expected = (
-        on_time.groupBy(
-            F.window("replication_time", "5 minutes").alias("w"),
-            F.col("replication_status").alias("status"),
-        )
-        .agg(F.sum("size").alias("total_size"), F.count("*").alias("total_num"))
-        .select(
-            F.lit(5).alias("time_unit"),
-            F.col("w.start").cast("long").alias("start_time"),
-            "status",
-            "total_size",
-            "total_num",
-        )
-        .filter(F.col("start_time") <= max_closed)
-    )
+    expected = stat_rollup(on_time, (5,)).filter(F.col("start_time") <= max_closed)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expected.collect()))
     # drop accounting: every emitted count came from on-time rows only — the
     # whole late tercile (mid.count() rows) is absent from the stat table
     n_dropped = mid.count()
     assert n_dropped > 0
-    emitted = got.agg(F.sum("total_num")).collect()[0][0]
-    on_time_closed = expected.agg(F.sum("total_num")).collect()[0][0]
+    n_rows = F.sum(F.col("success_object_num") + F.col("failed_object_num"))
+    emitted = got.agg(n_rows).collect()[0][0]
+    on_time_closed = expected.agg(n_rows).collect()[0][0]
     assert emitted == on_time_closed  # none of the n_dropped late rows leaked in
 
 
@@ -318,10 +298,7 @@ def test_crash_replay_double_append(spark, tmp_path):
     committed.write.mode("append").partitionBy("time_unit").parquet(out_dir)
     assert spark.read.parquet(out_dir).count() == 2 * n_committed
 
-    got = {
-        (r["time_unit"], r["start_time"], r["status"], r["total_size"], r["total_num"])
-        for r in read_stats(spark, out_dir).collect()
-    }
+    got = {tuple(r) for r in read_stats(spark, out_dir).select(*COLS).collect()}
     assert len(got) == n_committed
     closed_max = max(st for _, st, *_ in got)
     expected = {
