@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import prepared
-from ..views import oracle_cte
+from ..views import oracle_cte, parquet_footer
 
 TIME_UNITS = (1, 5, 60)  # minutes — TaskMonitor/ddb.yaml:85-109
 # one stat row per (time_unit, start_time); start_time is the window start in
@@ -31,6 +31,23 @@ STAT_SCHEMA = (
     "start_time long, success_object_size long, success_object_num long, "
     "failed_object_size long, failed_object_num long, time_unit int"
 )
+
+
+def read_stat_table(spark: SparkSession, path: str) -> DataFrame:
+    """The stat table at `path` (monitor_stats or streaming.monitor output),
+    read with the declared STAT_SCHEMA: no inference job. A declared read
+    gives null for a column its files lack, so a dir of another shape (the
+    old (status, total_size, total_num) stream) would report zero copies;
+    instead, when the data files' footer columns plus the path's partition
+    columns miss a STAT_SCHEMA column, this raises ValueError naming them
+    (no Spark job either). A dir with no data file is an empty table; a
+    missing path raises in the read."""
+    footer = parquet_footer(path)
+    have = set(footer.schema.names) | set(footer.partitions)
+    missing = [c for c, _ in (d.split() for d in STAT_SCHEMA.split(", ")) if c not in have]
+    if footer.schema and missing:
+        raise ValueError(f"{path} is not a stat table: its files lack {', '.join(missing)}")
+    return spark.read.schema(STAT_SCHEMA).parquet(path)
 
 
 def stat_sums() -> list[Column]:

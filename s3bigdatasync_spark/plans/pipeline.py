@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..operators import observed
 from ..operators.stats import size_stats_exprs
-from ..operators.windows import STAT_SCHEMA, stat_rollup
+from ..operators.windows import STAT_SCHEMA, read_stat_table, stat_rollup  # noqa: F401 (re-export)
 
 TASK_BATCH_SIZE = 100  # objects per task file ≙ message_body_max_num (ListProducer.py:17)
 
@@ -197,9 +197,10 @@ def dashboard_report(
           `window_minutes` minutes ending at the stat table's newest minute
           (no wall clock), as the route's parallel arrays.
 
-    One read of the time_unit=1 partition with the declared STAT_SCHEMA (no
-    inference job; a stat table with no rows is an empty report, a missing
-    stat_dir raises) feeds one aggregate, and the driver collects one row:
+    One read of the time_unit=1 partition with the declared STAT_SCHEMA
+    (operators.windows.read_stat_table: no inference job; a stat table with
+    no rows is an empty report, a missing stat_dir or a dir of another
+    shape raises) feeds one aggregate, and the driver collects one row:
     the totals, the bounds and the newest `window_minutes` minute rows —
     2 Spark jobs. start_time is unique per partition (monitor_stats and the
     streaming leg both write one row per (time_unit, start_time)), so those
@@ -209,7 +210,7 @@ def dashboard_report(
     (`UICenter/BackEnd/ddbModel.py:253-275`)."""
     if window_minutes < 1:
         raise ValueError(f"window_minutes must be >= 1, got {window_minutes}")
-    stat = spark.read.schema(STAT_SCHEMA).parquet(stat_dir).filter(F.col("time_unit") == 1)
+    stat = read_stat_table(spark, stat_dir).filter(F.col("time_unit") == 1)
     minute = F.struct("start_time", *_GRAPH_COLUMNS.values())
     row = stat.agg(
         F.sum("success_object_size").alias("success_size"),

@@ -1,10 +1,11 @@
 """SparkSession factory.
 
-Tuned for the testbed (local[32], 128 GiB) but with settings that hold on a
-real multi-executor cluster at ~100 TB: AQE on (runtime re-plan, skew-join
-splitting, partition coalescing), sane shuffle partition count, Arrow enabled
-for the few pandas-UDF operators, UTC session timezone so results are
-oracle-comparable and cluster-location-independent.
+Sized to the box it runs on (local[cores this process may use], a heap of
+half the RAM, at most 16g), with settings that hold on a real multi-executor
+cluster at ~100 TB: AQE on (runtime re-plan, skew-join splitting, partition
+coalescing), sane shuffle partition count, Arrow enabled for the few
+pandas-UDF operators, UTC session timezone so results are oracle-comparable
+and cluster-location-independent.
 """
 
 from __future__ import annotations
@@ -13,7 +14,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM override the box's own size.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+_RAM_GIB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+DEFAULT_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(16, _RAM_GIB // 2))}g")
 
 
 def get_spark(app_name: str = "s3bigdatasync-spark", cpus: int | None = None) -> SparkSession:
@@ -46,10 +50,11 @@ def get_spark(app_name: str = "s3bigdatasync-spark", cpus: int | None = None) ->
         # Local mode: ONE JVM hosts driver + all executor threads, so this is
         # the whole engine's heap. 8g survived a 104-query bench pass but
         # OOM'd at 109 queries (accumulated codegen classes + broadcasts +
-        # the round's new CC loop, ~12k stages in) — 16g on a 128 GiB box
-        # leaves margin without pretending memory is free. A real cluster
-        # splits this across executors and none of it applies.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # the round's new CC loop, ~12k stages in); 16g was the ceiling on a
+        # 128 GiB box. Half the RAM leaves the rest to Python workers and the
+        # page cache. A real cluster splits this across executors and none
+        # of it applies.
+        .config("spark.driver.memory", DEFAULT_DRIVER_MEM)
         # Always use the sort-based shuffle writer, never the bypass-merge
         # writer (r11 optimization, guide §2.2). With R reduce partitions
         # below spark.shuffle.sort.bypassMergeThreshold (default 200), each

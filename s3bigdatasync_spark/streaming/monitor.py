@@ -18,10 +18,9 @@ The stream reads the copy log with the pipeline's COPY_LOG_SCHEMA and emits
 the batch stat table's rows (operators.windows: STAT_SCHEMA, stat_sums), so
 plans.pipeline.dashboard_report reads a streamed stat dir unchanged. A
 checkpoint or stat dir written by the older (status, total_size, total_num)
-shape of this stream must not be reused (a declared-schema read finds none
-of the stat columns in the old files, reads them as null, and
-dashboard_report reports zero): delete both and rebuild them from the copy
-log.
+shape of this stream must not be reused (read_stats and dashboard_report
+raise ValueError on such a stat dir): delete both and rebuild them from the
+copy log.
 """
 
 from __future__ import annotations
@@ -29,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.windows import STAT_SCHEMA, stat_rollup, stat_sums
+from ..operators.windows import read_stat_table, stat_rollup, stat_sums
 from ..plans.pipeline import COPY_LOG_SCHEMA
 
 WATERMARK_DELAY = "10 minutes"
@@ -90,12 +89,13 @@ def stream_time_rollup(
 
 
 def read_stats(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The exactly-once view of the stat table: a declared STAT_SCHEMA read,
-    full-row distinct() — (time_unit, start_time) is unique in committed
-    output (append mode emits each closed window once) and crash-replayed
-    rows are byte-identical, so this removes only replay re-appends. See
+    """The exactly-once view of the stat table: a declared STAT_SCHEMA read
+    (operators.windows.read_stat_table), full-row distinct() — (time_unit,
+    start_time) is unique in committed output (append mode emits each closed
+    window once) and crash-replayed rows are byte-identical, so this removes
+    only replay re-appends. See
     ack_join.read_matches for the reader-contract rationale."""
-    return spark.read.schema(STAT_SCHEMA).parquet(out_dir).distinct()
+    return read_stat_table(spark, out_dir).distinct()
 
 
 def batch_equivalent(spark: SparkSession, copy_log_dir: str, minutes: int = 1) -> DataFrame:

@@ -22,7 +22,11 @@ Reference schemas being modeled (cited file:line into /root/reference):
 
 from __future__ import annotations
 
+import os
+from typing import NamedTuple
+
 from pyspark.sql import SparkSession
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType, TimestampNTZType
 
 BASE_TABLES = (
     "region",
@@ -168,30 +172,55 @@ DERIVED_VIEWS: dict[str, str] = {
 }
 
 
-def _nanos_ts_columns(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark reads them as long
-    (spark.sql.legacy.parquet.nanosAsLong); we convert to timestamp here so
-    every downstream operator sees real timestamps, matching DuckDB.
+class Footer(NamedTuple):
+    """A parquet table as its footers describe it (see parquet_footer)."""
 
-    A table may be a single parquet file (the testdata layout) or a
-    directory of part files (anything Spark itself wrote); for a directory
-    the first part file's footer speaks for the table."""
-    import os
+    schema: StructType  # the file columns, declared as the file source infers them
+    nanos: list[str]  # TIMESTAMP(NANOS) columns, declared as long
+    partitions: list[str]  # hive-style `k=v` directory columns (the read adds them)
+    size: int  # bytes over every data file
+    rows: int  # rows over every data file
 
+
+def parquet_footer(path: str) -> Footer:
+    """Describe the table at `path` from its parquet footers alone: no Spark
+    job. A table is one parquet file (the testdata layout) or a directory of
+    part files as Spark writes them: names starting with `_` or `.` are not
+    data (`_SUCCESS`, `.crc`, `_temporary`), `k=v` subdirectories are
+    partitions. The first data file's footer speaks for the schema; bytes and
+    rows sum over all of them. A directory with no data file is an empty
+    schema; a missing path is a directory with no data file.
+
+    The schema is what Spark's parquet inference gives (`from_arrow_type`;
+    micros/millis timestamps without UTC adjustment are NTZ), except that a
+    TIMESTAMP(NANOS) column, which Spark has no type for, is declared `long`
+    as `spark.sql.legacy.parquet.nanosAsLong` reads it. Every field is
+    nullable, as the file source makes it."""
     import pyarrow.parquet as pq
     import pyarrow.types as pat
+    from pyspark.sql.pandas.types import from_arrow_type
 
-    if os.path.isdir(path):
-        parts = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-        if not parts:
-            return []
-        path = parts[0]
-    schema = pq.read_schema(path)
-    return [f.name for f in schema if pat.is_timestamp(f.type) and f.type.unit == "ns"]
+    files = [path] if os.path.isfile(path) else []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        files += sorted(os.path.join(root, n) for n in names if not n.startswith(("_", ".")))
+    metas = [pq.read_metadata(f) for f in files]
+    arrow = metas[0].schema.to_arrow_schema() if metas else []
+    nanos = [f.name for f in arrow if pat.is_timestamp(f.type) and f.type.unit == "ns"]
+    schema = StructType(
+        [
+            StructField(f.name, LongType() if f.name in nanos else from_arrow_type(f.type, True))
+            for f in arrow
+        ]
+    )
+    parts = os.path.relpath(os.path.dirname(files[0]), path).split(os.sep) if metas else []
+    return Footer(
+        schema,
+        nanos,
+        [p.split("=", 1)[0] for p in parts if "=" in p],
+        sum(os.path.getsize(f) for f in files),
+        sum(m.num_rows for m in metas),
+    )
 
 
 # Rebalance low-parallelism base scans at registration time. Parquet row
@@ -204,8 +233,9 @@ def _nanos_ts_columns(path: str) -> list[str]:
 # cores-wide. Guarded three ways so it is a NO-OP anywhere it isn't needed:
 #   * scans already yielding >= defaultParallelism/2 splits (every real
 #     cluster scale — 100 TB splits into thousands of row groups) skip it;
-#   * tiny dimension files (< _WIDEN_MIN_BYTES) skip it, so broadcast dims
-#     don't pay a shuffle stage;
+#   * tiny dimension tables (< _WIDEN_MIN_BYTES summed over the data files,
+#     so a directory of part files is sized like one file) skip it, so
+#     broadcast dims don't pay a shuffle stage;
 #   * tests/test_plans.py flips WIDEN_SMALL_SCANS off to pin the pure plan
 #     shapes — exactly the shapes that run at scale.
 WIDEN_SMALL_SCANS = True
@@ -228,34 +258,26 @@ _WIDEN_MIN_BYTES = 512 * 1024
 _WIDEN_MIN_VECTOR_ROWS = 10_000
 
 
-def _widen_if_narrow(spark: SparkSession, df, path: str):
-    import os
-
+def _widen_if_narrow(spark: SparkSession, df, footer: Footer):
     if not WIDEN_SMALL_SCANS:
         return df
-    try:
-        size = os.path.getsize(path)
-    except OSError:
-        return df
     target = spark.sparkContext.defaultParallelism
-    if size < _WIDEN_MIN_BYTES or df.rdd.getNumPartitions() * 2 >= target:
+    if footer.size < _WIDEN_MIN_BYTES or df.rdd.getNumPartitions() * 2 >= target:
         return df
-    from pyspark.sql.types import ArrayType
-
-    if any(isinstance(f.dataType, ArrayType) for f in df.schema.fields):
-        try:
-            import pyarrow.parquet as pq
-
-            n_rows = pq.ParquetFile(path).metadata.num_rows
-        except Exception:
-            return df  # can't size it cheaply — leave the scan alone
-        if n_rows < _WIDEN_MIN_VECTOR_ROWS:
-            return df
+    is_vector = any(isinstance(f.dataType, ArrayType) for f in footer.schema)
+    if is_vector and footer.rows < _WIDEN_MIN_VECTOR_ROWS:
+        return df
     return df.repartition(target)
 
 
 def register_base_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Register the testdata parquet tables as temp views (idempotent)."""
+    """Register the testdata parquet tables as temp views (idempotent).
+
+    Each table is read with the schema its parquet footer declares
+    (parquet_footer), so registration runs no Spark job: an inferred
+    `spark.read.parquet` runs one schema-inference job per table. The
+    declared schema is the inferred one, so every plan below a view is
+    unchanged."""
     from pyspark.sql import functions as F
 
     # The driver may hand us a vanilla session; these must hold regardless.
@@ -264,12 +286,13 @@ def register_base_tables(spark: SparkSession, sf_dir: str) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
-    from pyspark.sql.types import TimestampNTZType
-
     for name in BASE_TABLES:
         path = f"{sf_dir}/{name}.parquet"
-        df = spark.read.parquet(path)
-        for c in _nanos_ts_columns(path):
+        footer = parquet_footer(path)
+        if not footer.schema:
+            raise FileNotFoundError(f"no parquet data file at {path}")
+        df = spark.read.schema(footer.schema).parquet(path)
+        for c in footer.nanos:
             # integer division keeps full precision (nanos ~1.7e18 exceeds
             # double's 53-bit mantissa); truncation matches DuckDB ns→us.
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
@@ -279,7 +302,7 @@ def register_base_tables(spark: SparkSession, sf_dir: str) -> None:
             # tz is UTC, so wall-clock values are unchanged).
             if isinstance(f.dataType, TimestampNTZType):
                 df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
-        df = _widen_if_narrow(spark, df, path)
+        df = _widen_if_narrow(spark, df, footer)
         df.createOrReplaceTempView(name)
 
 

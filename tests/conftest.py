@@ -17,7 +17,7 @@ SF_SMALL = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("s3bigdatasync-tests", cpus=8)
+    spark = get_spark("s3bigdatasync-tests")
     register_all(spark, SF_DIR)
     yield spark
 

@@ -411,6 +411,25 @@ def test_dashboard_report_of_an_empty_stat_table(spark, tmp_path):
         dashboard_report(spark, str(tmp_path / "missing"))
 
 
+def test_a_stat_dir_of_another_shape_fails_loudly(spark, tmp_path):
+    """A stat dir of the old streaming shape (status, total_size, total_num)
+    lacks the stat columns: a declared read would give null sums and a
+    report of zero copies. Both readers raise ValueError naming the missing
+    columns, from the footers alone (no Spark job)."""
+    old = str(tmp_path / "old")
+    spark.createDataFrame(
+        [(1, 60, "ok", 10, 1), (1, 120, "failed", 20, 2)],
+        "time_unit int, start_time long, status string, total_size long, total_num long",
+    ).write.partitionBy("time_unit").parquet(old)
+    for read in (lambda: dashboard_report(spark, old), lambda: read_stats(spark, old)):
+
+        def call(read=read):
+            with pytest.raises(ValueError, match="success_object_size, success_object_num"):
+                read()
+
+        assert _in_job_group(spark, call)[1] == 0
+
+
 # -- one stat rollup: batch and stream write one stat-table shape -------------
 
 _STAT_COLS = [
