@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import prepared
-from .joins import _diff_base
+from .joins import _diff_base, diff_kernel
 from .prefix import load_table_layout, with_global_order
 from ..views import oracle_cte
 
@@ -90,32 +90,10 @@ def inventory_diff_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     join. The filter lands in the scan (DataFilters; with date-partitioned
     inventories, PartitionFilters) — the incremental-sync query shape."""
     spark = prepared(spark, sf_dir)
-    cutoff = F.lit(INCREMENTAL_CUTOFF).cast("timestamp")
-    src = (
-        spark.table("inventory_src")
-        .filter(F.col("last_modified") >= cutoff)
-        .select("key", F.col("size").alias("src_size"), F.col("etag").alias("src_etag"))
-    )
-    dst = (
-        spark.table("inventory_dst")
-        .filter(F.col("last_modified") >= cutoff)
-        .select("key", F.col("size").alias("dst_size"), F.col("etag").alias("dst_etag"))
-    )
-    joined = src.join(dst, "key", "full_outer")
-    return (
-        joined.withColumn(
-            "variance",
-            F.when(F.col("dst_etag").isNull(), "New")
-            .when(F.col("src_etag").isNull(), "Delete")
-            .when(
-                (F.col("src_etag") != F.col("dst_etag"))
-                | (F.col("src_size") != F.col("dst_size")),
-                "Update",
-            )
-            .otherwise("Same"),
-        )
-        .filter(F.col("variance") != "Same")
-        .select("key", "src_size", "dst_size", "variance")
+    since = F.col("last_modified") >= F.lit(INCREMENTAL_CUTOFF).cast("timestamp")
+    return diff_kernel(
+        spark.table("inventory_src").filter(since),
+        spark.table("inventory_dst").filter(since),
     )
 
 

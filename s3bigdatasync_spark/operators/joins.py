@@ -185,18 +185,19 @@ FROM spine LEFT JOIN per_min ON spine.minute = per_min.minute
 # --- J4: the flagship inventory diff -----------------------------------------
 
 
-def _diff_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4 diff base — shared by inventory_diff and diff_summary. No final
-    sort anywhere: the correctness gate hashes order-insensitively, and a
-    global sort on a full diff result is exactly the shuffle you don't do at
-    100 TB (downstream consumers re-partition for their own needs anyway)."""
-    spark = prepared(spark, sf_dir)
-    src = spark.table("inventory_src").select(
+def diff_kernel(src: DataFrame, dst: DataFrame) -> DataFrame:
+    """The J4 variance rule, stated once: (key, size, etag) scans of the src
+    and dst snapshots → (key, src_size, dst_size, variance) for every key
+    whose variance is not Same. No final sort anywhere: the correctness gate
+    hashes order-insensitively, and a global sort on a full diff result is
+    exactly the shuffle you don't do at 100 TB (downstream consumers
+    re-partition for their own needs anyway)."""
+    src = src.select(
         F.col("key"),
         F.col("size").alias("src_size"),
         F.col("etag").alias("src_etag"),
     )
-    dst = spark.table("inventory_dst").select(
+    dst = dst.select(
         F.col("key"),
         F.col("size").alias("dst_size"),
         F.col("etag").alias("dst_etag"),
@@ -217,6 +218,13 @@ def _diff_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("variance") != "Same")
         .select("key", "src_size", "dst_size", "variance")
     )
+
+
+def _diff_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J4 diff base over the full snapshots — shared by inventory_diff,
+    diff_apply_check and the cost rollup (operators/cost.py)."""
+    spark = prepared(spark, sf_dir)
+    return diff_kernel(spark.table("inventory_src"), spark.table("inventory_dst"))
 
 
 def inventory_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -259,33 +267,34 @@ def diff_apply_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     nonzero value at production scale means the diff and the copier disagree
     about object identity (the class of bug the reference can't detect).
     Scale: reuses the diff's single shuffle; the anti-joins co-partition on
-    the same key."""
+    the same key. One plan of cross-joined one-row counts: building it runs
+    no Spark job."""
     p = prepared(spark, sf_dir)
     src = p.table("inventory_src").select("key", "size", "etag")
     dst = p.table("inventory_dst").select("key", "size", "etag")
-    diff = _diff_base(spark, sf_dir).select("key", "variance").transform(scoped_cache)
+    diff = _diff_base(spark, sf_dir).select("key", "variance")
     touched = diff.filter(F.col("variance").isin("Update", "Delete")).select("key")
     incoming = diff.filter(F.col("variance").isin("New", "Update")).select("key")
+    # read by three of the counts below: cached, lazily (no job here)
     reconstructed = (
         dst.join(touched, "key", "left_anti")
         .unionByName(src.join(incoming, "key", "left_semi"))
+        .transform(scoped_cache)
     )
-    n_missing = src.join(reconstructed, ["key", "size", "etag"], "left_anti").count()
-    n_extra = reconstructed.join(src, ["key", "size", "etag"], "left_anti").count()
-    row = [
-        (
-            src.count(),
-            dst.count(),
-            reconstructed.count(),
-            n_missing,
-            n_extra,
-            n_missing == 0 and n_extra == 0,
-        )
+    identity = ["key", "size", "etag"]
+    counts = [
+        (src, "n_src"),
+        (dst, "n_dst"),
+        (reconstructed, "n_reconstructed"),
+        (src.join(reconstructed, identity, "left_anti"), "n_missing"),
+        (reconstructed.join(src, identity, "left_anti"), "n_extra"),
     ]
-    return spark.createDataFrame(
-        row,
-        "n_src long, n_dst long, n_reconstructed long,"
-        " n_missing long, n_extra long, invertible boolean",
+    row = None
+    for df, name in counts:
+        one = df.agg(F.count(F.lit(1)).alias(name))
+        row = one if row is None else row.crossJoin(one)
+    return row.withColumn(
+        "invertible", (F.col("n_missing") == 0) & (F.col("n_extra") == 0)
     )
 
 
@@ -321,13 +330,12 @@ SELECT (SELECT count(*) FROM src) AS n_src,
 def diff_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 rollup: object count + bytes to move per variance class — the
     reference's cost-estimation input (README.md:4 item 4)."""
-    d = _diff_base(spark, sf_dir)
-    return (
-        d.groupBy("variance")
-        .agg(
-            F.count("*").alias("n_objects"),
-            F.sum(F.coalesce("src_size", F.lit(0))).alias("bytes_to_move"),
-        )
+    # the cost rollup's columns: a Delete's src_size is NULL, so its bytes are
+    # 0 either way; Catalyst prunes n_requests and est_usd
+    from .cost import transfer_cost_estimate
+
+    return transfer_cost_estimate(spark, sf_dir).select(
+        "variance", "n_objects", "bytes_to_move"
     )
 
 

@@ -5,21 +5,26 @@ The batch operator fingerprints a snapshot in one pass; at 100 TB you don't
 want to re-scan the table every time new inventory files land. Because the
 fingerprint is a commutative/associative SUM of per-row 40-bit md5 chunks,
 it is exactly incrementalizable: each micro-batch contributes its partial
-(n_rows, total_size, checksum) and the running state is the element-wise sum.
+(n_rows, total_size, checksum) and the running state is the element-wise sum
+(the checksum modulo CHECKSUM_MOD, which is associative over residues).
 The parity oracle (tests/test_stream_checksum.py) pins
 
     stream-over-appends state  ==  batch table_checksum over everything seen
 
 after every round of appends.
 
-Exactly-once: foreachBatch is at-least-once on retry, so the running state
-records the last applied batch_id and re-deliveries of an already-applied
-batch are skipped — the same sent-log idempotence pattern as
-streaming/queue.py, with a 1-row state table instead of a log.
+Exactly-once: the state is drift.versioned_count_sink's with no key — one
+row, committed as a new version through streaming/commit.py, with the
+applied-files log as the idempotence record. A retried batch, or every old
+file re-listed under a replaced checkpoint, contributes nothing; a new file
+counts once whatever batch id it rides. (A batch-id guard cannot do that:
+batch ids restart at 0 under a replaced checkpoint, so a new file riding a
+renumbered batch would be skipped.) A state dir of the older single-row
+layout (bare parquet, no meta) raises ValueError: rebuild it by draining
+the inventory into an empty state dir.
 
-Scale: per-batch work is one map-side-combinable agg over the new files only;
-the state is ONE row regardless of table size. The driver-side merge touches
-fingerprints, never data.
+Scale: per-batch work is one map-side-combinable agg over the new files only
+plus the files log; the state is ONE row regardless of table size.
 """
 
 from __future__ import annotations
@@ -27,10 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
-from pyspark.sql.utils import AnalysisException
 
-from ..operators.stats import CHECKSUM_MOD, checksum_chunk, checksum_sum
-from .localrel import local_rel
+from ..operators.stats import checksum_chunk, checksum_sum
+from .drift import read_versioned_counts, versioned_count_sink
 
 INVENTORY_STREAM_SCHEMA = StructType(
     [
@@ -40,24 +44,41 @@ INVENTORY_STREAM_SCHEMA = StructType(
     ]
 )
 
-_STATE_SCHEMA = "n_rows long, total_size long, checksum long, last_batch_id long"
+_STATE_SCHEMA = "n_rows long, total_size long, checksum long"
+
+
+def _fingerprint(df: DataFrame) -> DataFrame:
+    """The one-row (n_rows, total_size, checksum) of `df`."""
+    return df.agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.coalesce(F.sum("size"), F.lit(0)).alias("total_size"),
+        F.coalesce(checksum_sum(checksum_chunk()), F.lit(0)).alias("checksum"),
+    )
 
 
 def read_state(spark: SparkSession, state_dir: str):
     """Current running fingerprint (zeros before the first batch)."""
-    try:
-        rows = spark.read.parquet(state_dir).collect()
-    except AnalysisException as e:
-        # Only a missing state dir (first batch ever) may start from zeros.
-        # Any other read error must propagate: treating a transient failure
-        # as "no state" would silently reset the fingerprint AND the
-        # batch-id guard, double-applying history on the retry.
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-            raise
-        rows = []
+    rows = read_versioned_counts(spark, state_dir, _STATE_SCHEMA).collect()
     if not rows:
-        return {"n_rows": 0, "total_size": 0, "checksum": 0, "last_batch_id": -1}
+        return {"n_rows": 0, "total_size": 0, "checksum": 0}
     return rows[0].asDict()
+
+
+def _sink(state_dir: str):
+    """The foreachBatch sink: the one-row state, merged under the versioned
+    commit."""
+    return versioned_count_sink(
+        state_dir,
+        _STATE_SCHEMA,
+        [],
+        _fingerprint,
+        agg_exprs=[
+            F.sum("n_rows").alias("n_rows"),
+            F.sum("total_size").alias("total_size"),
+            # modular addition: (a+b) mod p == ((a mod p)+(b mod p)) mod p
+            checksum_sum(F.col("checksum")).alias("checksum"),
+        ],
+    )
 
 
 def stream_table_checksum(
@@ -75,34 +96,10 @@ def stream_table_checksum(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(inventory_dir)
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        state = read_state(batch_df.sparkSession, state_dir)
-        if batch_id <= state["last_batch_id"]:
-            return  # retry of an applied batch — idempotent skip
-        part = batch_df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("size"), F.lit(0)).alias("s"),
-            F.coalesce(checksum_sum(checksum_chunk()), F.lit(0)).alias("c"),
-        ).collect()[0]
-        merged = [
-            (
-                state["n_rows"] + part["n"],
-                state["total_size"] + part["s"],
-                # modular addition: (a+b) mod p == ((a mod p)+(b mod p)) mod p,
-                # so per-batch fingerprints merge without ever overflowing
-                (state["checksum"] + part["c"]) % CHECKSUM_MOD,
-                batch_id,
-            )
-        ]
-        local_rel(batch_df.sparkSession, merged, _STATE_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(state_dir)
-
     return (
         stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
+        .foreachBatch(_sink(state_dir))
         .trigger(availableNow=True)
         .start()
     )
@@ -111,9 +108,4 @@ def stream_table_checksum(
 def batch_equivalent(spark: SparkSession, inventory_dir: str) -> dict:
     """What the running state must equal: one batch pass over everything."""
     df = spark.read.schema(INVENTORY_STREAM_SCHEMA).parquet(inventory_dir)
-    row = df.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.coalesce(F.sum("size"), F.lit(0)).alias("total_size"),
-        F.coalesce(checksum_sum(checksum_chunk()), F.lit(0)).alias("checksum"),
-    ).collect()[0]
-    return row.asDict()
+    return _fingerprint(df).collect()[0].asDict()

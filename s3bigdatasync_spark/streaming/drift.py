@@ -14,13 +14,11 @@ The parity oracle (tests/test_stream_drift.py) pins
 after every round of appends.
 
 Exactly-once, from two mechanisms working together:
-  * versioned state — the merge reads the version the meta row points at,
-    writes counts/files under the NEXT monotonic version (never the one it
-    read — batch_id-keyed versions would self-overwrite on a
-    completed-batch retry), then flips the meta pointer last. A crash
-    between the writes re-runs the merge from the still-pointed-at OLD
-    version; half-written new versions are unreachable and GC'd. This is
-    the multi-row generalization of streaming/checksum.py's 1-row swap.
+  * versioned state — every batch commits a new (counts, files) version
+    through streaming/commit.py, the protocol every read-modify-write
+    streaming state shares: the next monotonic version is written, the
+    meta pointer flips last, and a crash before the flip replays the batch
+    from the still-pointed-at old version.
   * file-identity filtering — the state carries the applied-FILES log and
     every batch anti-joins its rows by input file before counting. There is
     deliberately NO batch-id skip guard: batch ids restart at 0 when a lost
@@ -44,10 +42,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
-from pyspark.sql.utils import AnalysisException
 
 from ..operators.curation import kl_report_from_counts, source_token_counts
-from .localrel import local_rel
+from .commit import commit, committed_version, part_path, read_part
 
 DOCS_STREAM_SCHEMA = StructType(
     [
@@ -57,70 +54,9 @@ DOCS_STREAM_SCHEMA = StructType(
     ]
 )
 
-_META_SCHEMA = "version long"
 _COUNTS_SCHEMA = "source string, token string, c long"
 _FILES_SCHEMA = "file_path string"
-
-
-def _scan_latest_complete(
-    state_dir: str, prefixes: tuple[str, str] = ("counts", "files")
-) -> int:
-    """Meta-loss recovery: the max version N whose {prefixes[0]}_vN AND
-    {prefixes[1]}_vN both committed (_SUCCESS marker present). The meta
-    pointer is rewritten via a parquet dir overwrite, which deletes before it
-    recreates — a crash inside that window leaves no meta, but the versioned
-    state dirs are intact (GC keeps exactly the reachable one, and GC only
-    runs AFTER a successful meta flip, so the newest complete version is
-    always recoverable). Returning the newest complete version is safe either
-    way: if the crashed batch had fully written vN, the applied-files log
-    inside vN makes its replay a no-op; if it hadn't, vN is incomplete (no
-    _SUCCESS) and we return vN-1, replaying the batch exactly once. Prefixes
-    parametric because the segmented store (streaming/segments.py) commits
-    (manifest, files) per version instead of (counts, files). Local FS only —
-    matching _gc_versions; an object-store deployment recovers via its own
-    listing."""
-    import re
-    from pathlib import Path
-
-    root = Path(state_dir)
-    if not root.is_dir():
-        return -1
-
-    def complete(prefix: str) -> set[int]:
-        out = set()
-        for d in root.iterdir():
-            m = re.fullmatch(rf"{prefix}_v(\d+)", d.name)
-            if m and (d / "_SUCCESS").exists():
-                out.add(int(m.group(1)))
-        return out
-
-    return max(complete(prefixes[0]) & complete(prefixes[1]), default=-1)
-
-
-def _read_meta(
-    spark: SparkSession,
-    state_dir: str,
-    prefixes: tuple[str, str] = ("counts", "files"),
-) -> int:
-    try:
-        # explicit schema: a half-rewritten meta dir (exists, no data files)
-        # must read as 0 rows → recovery scan, not an infer-schema error
-        rows = spark.read.schema(_META_SCHEMA).parquet(f"{state_dir}/meta").collect()
-    except AnalysisException as e:
-        # Only a missing meta may fall through to the recovery scan; any
-        # other read error must propagate — treating a transient failure as
-        # "no state" would silently abandon accumulated counts.
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-            raise
-        rows = []
-    if rows:
-        return rows[0]["version"]
-    # Missing/empty meta: a crash during the pointer overwrite, OR a true
-    # bootstrap. Scan for surviving complete versions before bootstrapping —
-    # bootstrapping over live state would orphan the counts AND the
-    # applied-files log (old files are never re-delivered under an intact
-    # checkpoint), silently losing every accumulated count.
-    return _scan_latest_complete(state_dir, prefixes)
+_PARTS = ("counts", "files")
 
 
 def read_versioned_counts(
@@ -129,45 +65,15 @@ def read_versioned_counts(
     """The running count state — the version the meta points at (empty
     relation before the first applied batch). Schema-parametric: the same
     versioned protocol backs differently-keyed count states (source-drift's
-    (source, token), ppl_gate's (lang, token))."""
-    last = _read_meta(spark, state_dir)
-    if last < 0:
-        return local_rel(spark, [], counts_schema)
-    return spark.read.schema(counts_schema).parquet(f"{state_dir}/counts_v{last}")
+    (source, token), ppl_gate's (lang, token), checksum's keyless row)."""
+    last = committed_version(spark, state_dir, _PARTS)
+    return read_part(spark, state_dir, "counts", last, counts_schema)
 
 
 def read_counts(spark: SparkSession, state_dir: str) -> DataFrame:
     """The running (source, token, c) state — the version the meta points at
     (empty relation before the first applied batch)."""
     return read_versioned_counts(spark, state_dir, _COUNTS_SCHEMA)
-
-
-def _gc_versions(state_dir: str, keep: set[int]) -> None:
-    """Best-effort removal of superseded state versions — the meta pointer
-    has already moved past them, so they are unreachable by any reader and
-    the dir would otherwise grow by one counts+files version per batch
-    forever. Local filesystem only (the test/driver environment); an object
-    store deployment swaps in its own lifecycle rule or SDK delete. Failures
-    are ignored: GC is an optimization, never a correctness dependency."""
-    import re
-    import shutil
-    from pathlib import Path
-
-    root = Path(state_dir)
-    if not root.is_dir():  # non-local path (s3://, hdfs://) — skip
-        return
-    for d in root.iterdir():
-        m = re.fullmatch(r"(counts|files)_v(\d+)", d.name)
-        if m and int(m.group(2)) not in keep:
-            shutil.rmtree(d, ignore_errors=True)
-
-
-def _read_files(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The applied-files log of the version the meta points at."""
-    last = _read_meta(spark, state_dir)
-    if last < 0:
-        return local_rel(spark, [], _FILES_SCHEMA)
-    return spark.read.schema(_FILES_SCHEMA).parquet(f"{state_dir}/files_v{last}")
 
 
 def drift_report(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -209,8 +115,9 @@ def versioned_count_sink(
     """foreachBatch sink maintaining an addition-merged count state under
     the versioned exactly-once protocol this module documents — parametric
     over the count key so differently-keyed BOUNDED states (source-drift
-    here, the ppl_gate LM in streaming/ppl_gate.py) share ONE implementation
-    of the crash-window machinery instead of cloning it. This sink rewrites
+    here, the ppl_gate LM in streaming/ppl_gate.py, and with no key at all
+    the one-row fingerprint of streaming/checksum.py) share ONE sink instead
+    of cloning it. This sink rewrites
     the full merged relation per batch, which is the right trade ONLY while
     the state is bounded (|keys × vocabulary| here); an unbounded state
     (one row per distinct corpus content) pays O(state) per batch and must
@@ -233,33 +140,24 @@ def versioned_count_sink(
         # renumbered batch that carries a genuinely-new file. The file log
         # makes every delivery idempotent instead — a retry of a fully
         # applied batch just rewrites an identical state version.
-        # Versions are MONOTONIC (last+1), deliberately not batch_id: a
-        # completed-batch retry under batch_id-keyed versions would read and
-        # overwrite the SAME dir in one action (the self-overwrite trap).
-        version = _read_meta(sp, state_dir) + 1
-        applied = _read_files(sp, state_dir)
+        last = committed_version(sp, state_dir, _PARTS)
+        applied = read_part(sp, state_dir, "files", last, _FILES_SCHEMA)
         # file-identity filter: a replaced checkpoint renumbers batches, so
         # rows from already-applied files must contribute nothing
         tagged = batch_df.withColumn("file_path", F.input_file_name())
         fresh = tagged.join(applied, "file_path", "left_anti")
-        old = read_versioned_counts(sp, state_dir, counts_schema)
+        old = read_part(sp, state_dir, "counts", last, counts_schema)
         merged = (
             old.unionByName(count_fn(fresh))
             .groupBy(*key_cols)
             .agg(*merge_aggs)
         )
         files = applied.unionByName(fresh.select("file_path").distinct()).distinct()
-        # the merge result must not depend on the files it's about to replace;
-        # versioned dirs already guarantee that (write target != read source),
-        # so no localCheckpoint materialization is needed.
-        merged.write.mode("overwrite").parquet(f"{state_dir}/counts_v{version}")
-        files.write.mode("overwrite").parquet(f"{state_dir}/files_v{version}")
-        # local_rel, not createDataFrame: a Python-RDD-backed 1-row write
-        # costs seconds per micro-batch (see streaming/localrel.py)
-        local_rel(sp, [(version,)], _META_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/meta")
-        _gc_versions(state_dir, keep={version})
+        # versioned dirs: the write target is never the read source, so the
+        # merge needs no localCheckpoint materialization
+        merged.write.mode("overwrite").parquet(part_path(state_dir, "counts", last + 1))
+        files.write.mode("overwrite").parquet(part_path(state_dir, "files", last + 1))
+        commit(sp, state_dir, last + 1, _PARTS)
 
     return sink
 

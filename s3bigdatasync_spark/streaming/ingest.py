@@ -12,11 +12,13 @@ within a batch the lowest doc_id wins, deterministically).
 Exactly-once: foreachBatch is at-least-once on retry, so both sinks
 (admitted docs, seen-log) write under a batch_id guard — the seen-log rows
 record the batch that wrote them, and a replayed batch_id is skipped
-entirely. Same idempotence pattern as streaming/checksum.py. With the
-checkpoint intact (the normal retry path) the guard is exact; recovering by
-REPLACING a lost checkpoint additionally assumes no new drops landed since
-the loss (a replayed batch_id could otherwise cover a new file) — drain
-once on the new checkpoint before accepting new drops.
+entirely. With the checkpoint intact (the normal retry path) the guard is
+exact; recovering by REPLACING a lost checkpoint additionally assumes no
+new drops landed since the loss (a replayed batch_id could otherwise cover
+a new file) — drain once on the new checkpoint before accepting new drops.
+The read-modify-write states (drift, segments, scd2, checksum) avoid that
+assumption with file-identity or watermark idempotence under the
+versioned commit of streaming/commit.py; this log keeps the batch-id guard.
 
 Scale: per-batch cost is O(|batch|) gate evaluation plus one anti-join of
 the batch's hashes against the seen-log — the batch side is small and

@@ -28,7 +28,9 @@ redelivery. A partially-appended batch followed by a replay self-heals:
 only the missing identities append. Admission verdicts are per-record and
 the catalog is read-only state, so unlike drift.py no read-modify-write
 versioning is needed; the log itself is the idempotence record (the
-streaming/ingest.py seen-log pattern).
+streaming/ingest.py seen-log pattern). A log written before pair identity
+(rows with dirty_name NULL) is refused at stream start and must be
+rebuilt from the dirty feed into an empty log dir.
 
 Scale: per batch, only the ARRIVING records are q-grammed; the catalog
 prefix index is computed once per batch from the catalog table (in
@@ -59,26 +61,8 @@ _LOG_SCHEMA = (
 )
 
 
-def _staged_dir(log_dir: str) -> str:
-    return log_dir.rstrip("/") + "_migrating"
-
-
 def read_match_log(spark: SparkSession, log_dir: str) -> DataFrame:
-    """The accumulated match log; fails LOUDLY if an interrupted
-    migrate_legacy_log left a `{log_dir}_migrating` staging dir behind — the
-    live log may be mid-overwrite (truncated), and silently serving it would
-    re-match already-logged records on the next redelivery (r6 ADVICE). Run
-    recover_migration(spark, log_dir) to finish or roll back, then retry."""
-    from pathlib import Path
-
-    if Path(_staged_dir(log_dir)).exists():
-        raise RuntimeError(
-            f"match log at {log_dir} has a leftover migration staging dir "
-            f"({_staged_dir(log_dir)}): a migrate_legacy_log run was "
-            "interrupted and the live log may be partially overwritten. "
-            f"Run recover_migration(spark, {log_dir!r}) to finish (staged "
-            "copy complete) or roll back (staged copy partial), then retry."
-        )
+    """The accumulated match log (empty before the first verdict)."""
     try:
         return spark.read.schema(_LOG_SCHEMA).parquet(log_dir)
     except AnalysisException as e:
@@ -87,99 +71,12 @@ def read_match_log(spark: SparkSession, log_dir: str) -> DataFrame:
         return spark.createDataFrame([], _LOG_SCHEMA)
 
 
-def recover_migration(spark: SparkSession, log_dir: str) -> str:
-    """Crash recovery for an interrupted migrate_legacy_log. The staging dir
-    is the witness of every crash window: (a) crash mid-STAGE write → staged
-    copy has no _SUCCESS marker, the live log was never touched → discard
-    the partial stage ('rolled_back'); (b) crash mid-FINAL overwrite (or
-    before cleanup) → staged copy is complete (_SUCCESS present), the live
-    log may be truncated → replay the overwrite from the staged copy, which
-    is idempotent, then remove the stage ('completed'). Returns 'noop' when
-    no staging dir exists. Single-writer admin step, like the migration."""
-    import shutil
-    from pathlib import Path
-
-    staged = Path(_staged_dir(log_dir))
-    if not staged.exists():
-        return "noop"
-    if (staged / "_SUCCESS").exists():
-        spark.read.schema(_LOG_SCHEMA).parquet(str(staged)).write.mode(
-            "overwrite"
-        ).parquet(log_dir)
-        shutil.rmtree(staged)
-        return "completed"
-    shutil.rmtree(staged)
-    return "rolled_back"
-
-
-def migrate_legacy_log(
-    spark: SparkSession, log_dir: str, dirty_dir: str, catalog_df: DataFrame
-) -> bool:
-    """One-time migration of a PRE-pair-identity match log to the
-    (dirty_id, dirty_name) identity scheme — the scd2.migrate_flat_layout
-    counterpart for this module's state.
-
-    A log written before `dirty_name` joined _LOG_SCHEMA reads back with
-    dirty_name=NULL (schema-on-read fills the missing column). The sink's
-    idempotence anti-join uses null-UNSAFE equality on the pair, so a NULL
-    legacy row never matches its redelivered record: every previously-logged
-    record would be re-matched on the next redelivery and the log would
-    permanently diverge from batch_equivalent (round-4 ADVICE, medium).
-
-    Migration recomputes verdicts for the legacy ids from the dirty source
-    (the catalog is read-only state, so verdicts are deterministic) and
-    rewrites the log without the NULL-name rows, tagged batch_id=-1. A
-    pair-identity row already present for a legacy id's record version is
-    kept, not recomputed. Single-writer admin step (run while no stream
-    writes), like any table migration; the rewrite stages through
-    `{log_dir}_migrating` — required anyway (Spark cannot overwrite a path
-    it is reading) and it is the recovery copy if the final overwrite
-    crashes mid-write. The staging dir is removed only AFTER the final
-    overwrite succeeds, so its presence is a durable incompleteness marker:
-    read_match_log refuses to serve a possibly-truncated log while it
-    exists, and recover_migration finishes or rolls back from it (r6
-    ADVICE — without the marker, recovery was manual and the partial log
-    was served silently). A leftover stage from a previous crash is
-    recovered on entry. Returns True if a migration happened."""
-    recover_migration(spark, log_dir)
-    log = read_match_log(spark, log_dir)
-    legacy_ids = (
-        log.where(F.col("dirty_name").isNull()).select("dirty_id").distinct()
-    )
-    if not legacy_ids.take(1):
-        return False
-    keep = log.where(F.col("dirty_name").isNotNull())
-    dirty = _normalized(
-        spark.read.schema(DIRTY_STREAM_SCHEMA).parquet(dirty_dir)
-    ).distinct()
-    todo = dirty.join(legacy_ids, "dirty_id", "semi").join(
-        keep.select("dirty_id", "dirty_name").distinct(),
-        ["dirty_id", "dirty_name"],
-        "left_anti",
-    )
-    migrated = keep.unionByName(
-        _complete_verdicts(todo, catalog_df).withColumn(
-            "batch_id", F.lit(-1).cast("long")
-        )
-    )
-    staged = _staged_dir(log_dir)
-    migrated.write.mode("overwrite").parquet(staged)
-    spark.read.schema(_LOG_SCHEMA).parquet(staged).write.mode("overwrite").parquet(
-        log_dir
-    )
-    import shutil
-
-    shutil.rmtree(staged)
-    return True
-
-
 def _normalized(dirty: DataFrame) -> DataFrame:
     """NULL dirty_name → '' at every input boundary. The identity anti-join
     is null-UNSAFE, so a NULL-name record would never match its own logged
     verdict (re-appended on every redelivery) AND its logged row would spoof
-    the legacy-log detector — with migrate_legacy_log unable to clear it,
-    because migration re-reads the same NULL-name source. Normalizing at
-    the boundary makes every identity non-null: a NULL-name feed row IS the
+    the legacy-log detector, bricking the stream. Normalizing at the
+    boundary makes every identity non-null: a NULL-name feed row IS the
     record version with the empty name."""
     return dirty.withColumn("dirty_name", F.coalesce("dirty_name", F.lit("")))
 
@@ -221,17 +118,16 @@ def stream_resolve(
     # A pre-pair-identity log reads back with dirty_name=NULL; the
     # null-unsafe pair anti-join in the sink would never match those rows,
     # so every legacy record would silently re-match on redelivery and the
-    # log would diverge from batch_equivalent forever. Fail loudly and name
-    # the admin step instead (round-4 ADVICE, medium). Checked ONCE at
-    # start, not per batch: the sink normalizes names and so never writes a
-    # NULL-name row itself — a clean log cannot become legacy mid-stream,
-    # and the per-batch probe was one wasted log-scan job per micro-batch.
+    # log would diverge from batch_equivalent forever. Fail loudly instead
+    # (round-4 ADVICE, medium). Checked ONCE at start, not per batch: the
+    # sink normalizes names and so never writes a NULL-name row itself — a
+    # clean log cannot become legacy mid-stream, and the per-batch probe
+    # was one wasted log-scan job per micro-batch.
     if read_match_log(spark, log_dir).where(F.col("dirty_name").isNull()).take(1):
         raise RuntimeError(
             f"match log at {log_dir} contains legacy rows with "
-            "dirty_name=NULL (written before pair identity); run "
-            "streaming.resolve.migrate_legacy_log(spark, log_dir, "
-            "dirty_dir, catalog_df) once before streaming"
+            "dirty_name=NULL (written before pair identity); rebuild the "
+            "log from the dirty feed: stream it into an empty log dir"
         )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:

@@ -21,10 +21,14 @@ that a re-run cannot clobber.
 
 Scale: per-batch work is keyed joins between one snapshot and the run
 table, all hash-partitioned on the object key; the run table rewrite is the
-only full-table write, landed as a pointer-swapped version dir so no crash
-window can corrupt the current table (at production scale: a MERGE into a
-Delta/Iceberg table, same plan shape — the table format supplies the
-atomic pointer).
+only full-table write, landed as a pointer-swapped version dir
+(streaming/commit.py, the protocol every streaming state shares) so no
+crash window can corrupt the current table (at production scale: a MERGE
+into a Delta/Iceberg table, same plan shape — the table format supplies
+the atomic pointer). A runs dir in the flat layout that predates the
+pointer swap (bare parquet files, no meta) is refused with a ValueError,
+never read as empty: rebuild it by streaming the snapshots into an empty
+runs dir.
 
 Write-amplification audit (round-10, prompted by dedup_gate's segmented
 rework): this module DOES rewrite the full run table per batch, and unlike
@@ -52,10 +56,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, IntegerType, StringType, StructField, StructType
-from pyspark.sql.utils import AnalysisException
 
 from ..operators.timeline import snapshot_history_merge
-from .localrel import local_rel
+from .commit import commit, committed_version, part_path, read_part
 
 SNAPSHOT_STREAM_SCHEMA = StructType(
     [
@@ -69,130 +72,28 @@ SNAPSHOT_STREAM_SCHEMA = StructType(
 _RUNS_SCHEMA = (
     "key string, run_id long, etag string, v_from int, v_to int, size long"
 )
-_META_SCHEMA = "version long"
-
-
-def _scan_latest_complete(runs_dir: str) -> int:
-    """Meta-loss recovery: max version N whose runs_vN committed (_SUCCESS).
-    The meta pointer is a parquet dir overwrite (delete-then-recreate); a
-    crash in that window leaves versioned run tables but no pointer. The
-    newest complete version is always the right answer: it either already
-    contains the crashed batch's merge (whose replay the v <= max(v_to)
-    watermark then skips) or predates it (replayed exactly once). GC only
-    deletes versions AFTER a successful meta flip, so the reachable one
-    survives every crash window. Local FS only, matching _gc_versions."""
-    import re
-    from pathlib import Path
-
-    root = Path(runs_dir)
-    if not root.is_dir():
-        return -1
-    out = set()
-    for d in root.iterdir():
-        m = re.fullmatch(r"runs_v(\d+)", d.name)
-        if m and (d / "_SUCCESS").exists():
-            out.add(int(m.group(1)))
-    return max(out, default=-1)
-
-
-def _flat_layout_files(runs_dir: str) -> list[str]:
-    """The bare parquet data files of a pre-pointer FLAT-layout table (empty
-    list when runs_dir is versioned or absent). Listed file-by-file so a
-    flat read can never sweep in runs_v*/meta subdirs — a crash between the
-    runs_v0 write and the meta flip leaves such a subdir, and Spark's
-    partition discovery over the parent dir would double-read it."""
-    from pathlib import Path
-
-    root = Path(runs_dir)
-    if not root.is_dir():
-        return []
-    return sorted(
-        str(f) for f in root.iterdir() if f.suffix == ".parquet" and f.is_file()
-    )
-
-
-def _has_flat_layout(runs_dir: str) -> bool:
-    return bool(_flat_layout_files(runs_dir))
-
-
-def _read_meta(spark: SparkSession, runs_dir: str) -> int:
-    try:
-        # explicit schema: a half-rewritten meta dir must read as 0 rows →
-        # recovery scan, not an infer-schema error
-        rows = spark.read.schema(_META_SCHEMA).parquet(f"{runs_dir}/meta").collect()
-    except AnalysisException as e:
-        # only a missing meta may fall through to recovery; see drift.py
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-            raise
-        rows = []
-    if rows:
-        return rows[0]["version"]
-    # Missing/empty meta: crash inside the pointer overwrite, a legacy
-    # flat-layout table, or a true bootstrap — never silently the last one:
-    # treating live state as empty would regress the max(v_to) watermark and
-    # re-apply all history on the next merge.
-    return _scan_latest_complete(runs_dir)
+_PARTS = ("runs",)
 
 
 def read_runs(spark: SparkSession, runs_dir: str) -> DataFrame:
     """Current run table — the version the meta pointer names (empty before
     the first snapshot). STRICTLY READ-ONLY (round-3 ADVICE: a read that
     writes lets two concurrent readers race the runs_v0/meta overwrites).
-    The state is pointer-swapped, never overwritten in place: a plain
-    `overwrite` of the run table is not atomic (a crash mid-commit leaves a
-    corrupt dir whose max(v_to) watermark regresses, and the next merge
-    silently re-applies history); writing runs_v{n+1} and flipping the 1-row
-    meta last makes every crash window recoverable — the drift.py state
-    contract. A lost meta is recovered by scanning for the newest committed
-    runs_v* dir, and a legacy FLAT-layout table (bare parquet files written
-    before the pointer-swap change, so no meta and no version dirs) is read
-    in place — never silently treated as empty, which would regress the
-    watermark. Migration to the versioned layout happens on the next WRITE
-    (the sink's pointer flip lands the merged state at runs_v0) or via the
-    explicit migrate_flat_layout() step."""
-    last = _read_meta(spark, runs_dir)
+    The state is pointer-swapped through streaming/commit.py, never
+    overwritten in place: a plain `overwrite` of the run table is not
+    atomic (a crash mid-commit leaves a corrupt dir whose max(v_to)
+    watermark regresses, and the next merge silently re-applies history).
+    A lost meta is recovered by scanning for the newest committed runs_v*
+    dir; a flat-layout dir raises ValueError."""
+    return _runs_at(spark, runs_dir, committed_version(spark, runs_dir, _PARTS))
+
+
+def _runs_at(spark: SparkSession, runs_dir: str, last: int) -> DataFrame:
     if last < 0:
-        flat = _flat_layout_files(runs_dir)
-        if flat:
-            # the bare data files only, never the parent dir: a crashed
-            # migration's half-written runs_v0 subdir must not be swept in
-            return spark.read.schema(_RUNS_SCHEMA).parquet(*flat)
+        # createDataFrame, not read_part's literal-NULL local_rel: folding a
+        # 12-version backlog over the latter measured ~40% slower
         return spark.createDataFrame([], _RUNS_SCHEMA)
-    return spark.read.schema(_RUNS_SCHEMA).parquet(f"{runs_dir}/runs_v{last}")
-
-
-def migrate_flat_layout(spark: SparkSession, runs_dir: str) -> bool:
-    """Explicit one-time migration of a legacy flat-layout run table to the
-    pointer-swapped versioned layout (runs_v0 + meta). Single-writer admin
-    step — run it while no stream is writing, like any table migration.
-    Returns True if a migration happened. The flat files stay in place
-    (reads are version-dir-scoped once meta exists); deleting user data is
-    the operator's call, not this function's."""
-    flat = _flat_layout_files(runs_dir)
-    if _read_meta(spark, runs_dir) >= 0 or not flat:
-        return False
-    legacy = spark.read.schema(_RUNS_SCHEMA).parquet(*flat)
-    legacy.write.mode("overwrite").parquet(f"{runs_dir}/runs_v0")
-    spark.createDataFrame([(0,)], _META_SCHEMA).write.mode("overwrite").parquet(
-        f"{runs_dir}/meta"
-    )
-    return True
-
-
-def _gc_versions(runs_dir: str, keep: set[int]) -> None:
-    """Best-effort deletion of superseded (unreachable) run-table versions.
-    Local FS only; object-store deployments use a lifecycle rule."""
-    import re
-    import shutil
-    from pathlib import Path
-
-    root = Path(runs_dir)
-    if not root.is_dir():
-        return
-    for d in root.iterdir():
-        m = re.fullmatch(r"runs_v(\d+)", d.name)
-        if m and int(m.group(1)) not in keep:
-            shutil.rmtree(d, ignore_errors=True)
+    return read_part(spark, runs_dir, "runs", last, _RUNS_SCHEMA)
 
 
 def stream_snapshot_history(
@@ -212,7 +113,8 @@ def stream_snapshot_history(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        runs = read_runs(sess, runs_dir)
+        last = committed_version(sess, runs_dir, _PARTS)
+        runs = _runs_at(sess, runs_dir, last)
         applied = runs.agg(F.max("v_to").alias("m")).collect()[0]["m"]
         applied = -1 if applied is None else applied
         versions = sorted(
@@ -242,14 +144,10 @@ def stream_snapshot_history(
         # the one it read, so no crash can corrupt the current table), then
         # flips the meta. (Production shape: a Delta/Iceberg MERGE — same
         # plan, the table format supplies the atomic pointer.)
-        version = _read_meta(sess, runs_dir) + 1
         runs.select(
             "key", "run_id", "etag", "v_from", "v_to", "size"
-        ).write.mode("overwrite").parquet(f"{runs_dir}/runs_v{version}")
-        local_rel(sess, [(version,)], _META_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(f"{runs_dir}/meta")
-        _gc_versions(runs_dir, keep={version})
+        ).write.mode("overwrite").parquet(part_path(runs_dir, "runs", last + 1))
+        commit(sess, runs_dir, last + 1, _PARTS)
 
     return (
         stream.writeStream.outputMode("append")

@@ -41,7 +41,7 @@ fast and deployment-scale segments get the bucketed layout exactly when it
 starts paying. The buckets shape the WRITES; the LSM bounds HOW MUCH is
 written.
 
-Exactly-once is drift.py's protocol verbatim, re-based onto a manifest:
+Exactly-once is drift.py's protocol, re-based onto a manifest:
   * every batch's writes (new segment, merged segments, files log,
     manifest) land under names derived from the NEXT monotonic version;
     the meta pointer flips last. A crash anywhere before the flip leaves
@@ -58,8 +58,9 @@ Exactly-once is drift.py's protocol verbatim, re-based onto a manifest:
     ever seen) — at 1B docs in 10k-doc files that is ~100k short strings,
     noise next to the state.
   * meta-loss recovery scans for the newest version whose manifest AND
-    files log both committed (drift._scan_latest_complete with
-    ("manifest", "files")); the same replay-is-a-no-op argument applies.
+    files log both committed; the same replay-is-a-no-op argument applies.
+The meta read, the recovery scan, the flip and the GC are
+streaming/commit.py's, shared with drift, scd2 and checksum.
 
 Merge aggregates must be associative+commutative over union (sum, min, …)
 — the same contract versioned_count_sink documents — because a key's total
@@ -74,7 +75,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import resolved_dir
-from .drift import _read_meta, _scan_latest_complete  # shared protocol core
+from .commit import commit, committed_version, part_path, read_part
 from .localrel import local_rel
 
 MERGE_FANOUT = 4  # segments per tier before they merge one tier up
@@ -82,7 +83,7 @@ BUCKET_MIN_ROWS = 1_000_000  # partitionBy(bucket) only at/above this size
 
 _MANIFEST_SCHEMA = "seg string, tier int, n_rows long"
 _FILES_SCHEMA = "file_path string"
-_SEG_PREFIXES = ("manifest", "files")
+_PARTS = ("manifest", "files")
 
 # resolved_dir(state_dir) -> the token of the writer allowed to flip it (see
 # the single-writer contract note inside segmented_count_sink). Keyed per
@@ -104,11 +105,7 @@ def _manifest_at(
     bucket-layout threshold and never needs a data scan."""
     if last < 0:
         return []
-    rows = (
-        spark.read.schema(_MANIFEST_SCHEMA)
-        .parquet(f"{state_dir}/manifest_v{last}")
-        .collect()
-    )
+    rows = read_part(spark, state_dir, "manifest", last, _MANIFEST_SCHEMA).collect()
     # sort on the name's (tier, name) encoding so a multi-file manifest can
     # never flake the merge-group choice
     return sorted(
@@ -120,17 +117,7 @@ def _manifest_at(
 def _read_manifest(
     spark: SparkSession, state_dir: str
 ) -> list[tuple[str, int, int]]:
-    return _manifest_at(spark, state_dir, _read_meta(spark, state_dir, _SEG_PREFIXES))
-
-
-def _files_at(spark: SparkSession, state_dir: str, last: int) -> DataFrame:
-    if last < 0:
-        return local_rel(spark, [], _FILES_SCHEMA)
-    return spark.read.schema(_FILES_SCHEMA).parquet(f"{state_dir}/files_v{last}")
-
-
-def _read_files(spark: SparkSession, state_dir: str) -> DataFrame:
-    return _files_at(spark, state_dir, _read_meta(spark, state_dir, _SEG_PREFIXES))
+    return _manifest_at(spark, state_dir, committed_version(spark, state_dir, _PARTS))
 
 
 def _read_segment(
@@ -212,27 +199,6 @@ def read_segmented_counts(
     )
 
 
-def _gc(state_dir: str, version: int, keep_segs: set[str]) -> None:
-    """Best-effort removal of everything unreachable from the freshly
-    flipped version: superseded manifest/files versions, and any segment the
-    current manifest does not reference (which includes crashed-attempt
-    orphans). Failures ignored — GC is never a correctness dependency."""
-    import re
-    import shutil
-    from pathlib import Path
-
-    root = Path(state_dir)
-    if not root.is_dir():  # non-local path (s3://, hdfs://) — skip
-        return
-    for d in root.iterdir():
-        m = re.fullmatch(r"(manifest|files)_v(\d+)", d.name)
-        if m and int(m.group(2)) != version:
-            shutil.rmtree(d, ignore_errors=True)
-            continue
-        if re.fullmatch(r"seg_v\d+_t\d+_\d+", d.name) and d.name not in keep_segs:
-            shutil.rmtree(d, ignore_errors=True)
-
-
 def segmented_count_sink(
     state_dir: str,
     counts_schema: str,
@@ -272,8 +238,7 @@ def segmented_count_sink(
     # pointer is known without a read. A restart builds a fresh closure and
     # re-reads; a replayed batch sees the same committed meta either way.
     # (Round-11 overhead cut: the r10 sink re-read meta three times per
-    # batch — once here, once inside _read_files, once inside
-    # _read_manifest.)
+    # batch — once here, once for the files log, once for the manifest.)
     #
     # SINGLE-WRITER CONTRACT (r12, verdict item 9): the cached pointer is
     # only sound if no other sink writes this state_dir concurrently — a
@@ -304,10 +269,10 @@ def segmented_count_sink(
             )
         sp = batch_df.sparkSession
         if "v" not in last_flipped:
-            last_flipped["v"] = _read_meta(sp, state_dir, _SEG_PREFIXES)
+            last_flipped["v"] = committed_version(sp, state_dir, _PARTS)
         last = last_flipped["v"]
         version = last + 1
-        applied = _files_at(sp, state_dir, last)
+        applied = read_part(sp, state_dir, "files", last, _FILES_SCHEMA)
         tagged = batch_df.withColumn("file_path", F.input_file_name())
         fresh = tagged.join(applied, "file_path", "left_anti")
         manifest = list(_manifest_at(sp, state_dir, last))
@@ -361,17 +326,14 @@ def segmented_count_sink(
             manifest = [e for e in manifest if e[0] not in group_names]
             manifest.append((name, tier + 1, n_est))
         files = applied.unionByName(fresh.select("file_path").distinct()).distinct()
-        files.write.mode("overwrite").parquet(f"{state_dir}/files_v{version}")
-        # manifest + meta ride local_rel, not createDataFrame: a Python-RDD-
+        files.write.mode("overwrite").parquet(part_path(state_dir, "files", version))
+        # the manifest rides local_rel, not createDataFrame: a Python-RDD-
         # backed 4-row write costs ~4.4 s per micro-batch (the dominant term
         # of the r10 sink's fixed overhead — see streaming/localrel.py)
         local_rel(sp, manifest, _MANIFEST_SCHEMA).coalesce(1).write.mode(
             "overwrite"
-        ).parquet(f"{state_dir}/manifest_v{version}")
-        local_rel(sp, [(version,)], "version long").write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/meta")
+        ).parquet(part_path(state_dir, "manifest", version))
+        commit(sp, state_dir, version, _PARTS, live={s for s, _t, _n in manifest})
         last_flipped["v"] = version
-        _gc(state_dir, version, keep_segs={s for s, _t, _n in manifest})
 
     return sink

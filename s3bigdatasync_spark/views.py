@@ -180,6 +180,7 @@ class Footer(NamedTuple):
     partitions: list[str]  # hive-style `k=v` directory columns (the read adds them)
     size: int  # bytes over every data file
     rows: int  # rows over every data file
+    row_groups: int  # row groups over every data file
 
 
 def parquet_footer(path: str) -> Footer:
@@ -187,9 +188,9 @@ def parquet_footer(path: str) -> Footer:
     job. A table is one parquet file (the testdata layout) or a directory of
     part files as Spark writes them: names starting with `_` or `.` are not
     data (`_SUCCESS`, `.crc`, `_temporary`), `k=v` subdirectories are
-    partitions. The first data file's footer speaks for the schema; bytes and
-    rows sum over all of them. A directory with no data file is an empty
-    schema; a missing path is a directory with no data file.
+    partitions. The first data file's footer speaks for the schema; bytes,
+    rows and row groups sum over all of them. A directory with no data file
+    is an empty schema; a missing path is a directory with no data file.
 
     The schema is what Spark's parquet inference gives (`from_arrow_type`;
     micros/millis timestamps without UTC adjustment are NTZ), except that a
@@ -220,6 +221,7 @@ def parquet_footer(path: str) -> Footer:
         [p.split("=", 1)[0] for p in parts if "=" in p],
         sum(os.path.getsize(f) for f in files),
         sum(m.num_rows for m in metas),
+        sum(m.num_row_groups for m in metas),
     )
 
 
@@ -231,8 +233,12 @@ def parquet_footer(path: str) -> Footer:
 # stranding the other cores. Registering the base table behind one round-robin
 # exchange of the raw columns lets all downstream view expressions compute
 # cores-wide. Guarded three ways so it is a NO-OP anywhere it isn't needed:
-#   * scans already yielding >= defaultParallelism/2 splits (every real
-#     cluster scale — 100 TB splits into thousands of row groups) skip it;
+#   * scans of >= defaultParallelism/2 row groups, summed over the footers
+#     (every real cluster scale — 100 TB holds thousands of row groups), skip
+#     it: counted from the footers, not from the scan's splits, whose
+#     planning costs ~1 s on a cold JVM and which overstate parallelism when
+#     a large single-row-group file splits into byte ranges only one of
+#     which holds data;
 #   * tiny dimension tables (< _WIDEN_MIN_BYTES summed over the data files,
 #     so a directory of part files is sized like one file) skip it, so
 #     broadcast dims don't pay a shuffle stage;
@@ -262,7 +268,7 @@ def _widen_if_narrow(spark: SparkSession, df, footer: Footer):
     if not WIDEN_SMALL_SCANS:
         return df
     target = spark.sparkContext.defaultParallelism
-    if footer.size < _WIDEN_MIN_BYTES or df.rdd.getNumPartitions() * 2 >= target:
+    if footer.size < _WIDEN_MIN_BYTES or footer.row_groups * 2 >= target:
         return df
     is_vector = any(isinstance(f.dataType, ArrayType) for f in footer.schema)
     if is_vector and footer.rows < _WIDEN_MIN_VECTOR_ROWS:

@@ -187,6 +187,22 @@ def test_diff_is_invertible(spark, sf_dir):
     assert row["n_reconstructed"] == row["n_src"]
 
 
+def test_diff_apply_check_builds_no_job(spark, sf_dir):
+    """diff_apply_check is one plan of cross-joined one-row counts: building
+    it runs no Spark job (the eager counts it replaced ran 28-35), the
+    cross joins broadcast, and it still matches its DuckDB oracle."""
+    from s3bigdatasync_spark.operators import joins
+
+    from .oracle_utils import assert_match
+    from .test_pipeline import _in_job_group
+    from .test_plan_hygiene import assert_plan_hygiene
+
+    df, jobs = _in_job_group(spark, lambda: joins.diff_apply_check(spark, sf_dir))
+    assert jobs == 0
+    assert_plan_hygiene(df, "diff_apply_check")
+    assert_match(df, joins.ORACLES["diff_apply_check"], sf_dir)
+
+
 def test_snapshot_history_intervals_well_formed(spark):
     """SCD2 invariants: intervals are ordered and non-overlapping per key,
     every key's first run is the create, and every kept key really changed."""

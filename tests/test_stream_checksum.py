@@ -11,6 +11,8 @@ from s3bigdatasync_spark.streaming.checksum import (
     read_state,
     stream_table_checksum,
 )
+from s3bigdatasync_spark.streaming.commit import committed_version
+from s3bigdatasync_spark.streaming.drift import _PARTS
 
 
 def _mk_rows(tag: str, n: int):
@@ -42,7 +44,7 @@ def test_incremental_checksum_equals_batch(spark, tmp_path):
 
 
 def test_duplicate_batch_is_skipped(spark, tmp_path):
-    """Re-delivering an applied batch_id must not double-count (the
+    """Re-delivering an applied batch must not double-count (the
     foreachBatch retry case)."""
     inv_dir = str(tmp_path / "inv")
     state_dir = str(tmp_path / "state")
@@ -53,31 +55,27 @@ def test_duplicate_batch_is_skipped(spark, tmp_path):
     q = stream_table_checksum(spark, inv_dir, state_dir, ckpt)
     q.awaitTermination(120)
     before = read_state(spark, state_dir)
-    assert before["last_batch_id"] >= 0
+    assert committed_version(spark, state_dir, _PARTS) == 0
 
-    # same checkpoint, no new files: the drained stream re-fires nothing and
-    # the batch_id guard keeps the state untouched even if the sink re-runs
+    # same checkpoint, no new files: the drained stream re-fires nothing;
+    # state and committed version stay untouched
     q2 = stream_table_checksum(spark, inv_dir, state_dir, ckpt)
     q2.awaitTermination(120)
     after = read_state(spark, state_dir)
     assert after == before  # no new files, no re-application
+    assert committed_version(spark, state_dir, _PARTS) == 0
 
 
 def test_crash_between_state_commit_and_checkpoint_commit(spark, tmp_path):
     """The sink's kill window (r6 verdict item 5, the drift pattern): state
-    v1 fully written — last_batch_id recorded — but the process dies BEFORE
-    the streaming checkpoint commits batch 1. A restart redelivers batch 1
-    with the SAME batch_id; the guard must skip it (the state already
-    includes it) and the final fingerprint must equal one batch pass —
-    no double-count."""
-    from pyspark.sql import functions as F
+    v1 fully committed — meta flipped, B's file in the applied-files log —
+    but the process dies BEFORE the streaming checkpoint commits batch 1. A
+    restart redelivers B under the SAME batch_id; the files log must make
+    it contribute nothing, and the final fingerprint must equal one batch
+    pass — no double-count."""
+    from pathlib import Path
 
-    from s3bigdatasync_spark.streaming.checksum import (
-        _STATE_SCHEMA,
-        CHECKSUM_MOD,
-        checksum_chunk,
-        checksum_sum,
-    )
+    from s3bigdatasync_spark.streaming.checksum import _sink
 
     inv_dir = str(tmp_path / "inv")
     state_dir = str(tmp_path / "state")
@@ -87,32 +85,22 @@ def test_crash_between_state_commit_and_checkpoint_commit(spark, tmp_path):
     ).write.mode("append").parquet(inv_dir)
     q = stream_table_checksum(spark, inv_dir, state_dir, ckpt)
     q.awaitTermination(120)
-    state = read_state(spark, state_dir)
-    assert state["last_batch_id"] == 0
+    assert committed_version(spark, state_dir, _PARTS) == 0
 
-    # drop B lands; hand-apply EXACTLY the sink's state write for batch 1
-    # (the stream never runs, so the checkpoint still only knows batch 0 —
-    # the restart below redelivers B under batch_id 1, like a real kill
-    # after the state overwrite)
-    rows_b = _mk_rows("b", 25)
-    bdf = spark.createDataFrame(rows_b, INVENTORY_STREAM_SCHEMA)
-    bdf.coalesce(1).write.mode("append").parquet(inv_dir)
-    part = bdf.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("size"), F.lit(0)).alias("s"),
-        F.coalesce(checksum_sum(checksum_chunk()), F.lit(0)).alias("c"),
-    ).collect()[0]
-    spark.createDataFrame(
-        [
-            (
-                state["n_rows"] + part["n"],
-                state["total_size"] + part["s"],
-                (state["checksum"] + part["c"]) % CHECKSUM_MOD,
-                1,
-            )
-        ],
-        _STATE_SCHEMA,
-    ).write.mode("overwrite").parquet(state_dir)
+    # drop B lands; run EXACTLY the sink's batch-1 commit over B's file by
+    # hand (the stream never runs, so the checkpoint still only knows batch
+    # 0 — the restart below redelivers B under batch_id 1, like a real kill
+    # after the state commit)
+    landed = set(Path(inv_dir).glob("*.parquet"))
+    spark.createDataFrame(_mk_rows("b", 25), INVENTORY_STREAM_SCHEMA).coalesce(
+        1
+    ).write.mode("append").parquet(inv_dir)
+    (b_file,) = set(Path(inv_dir).glob("*.parquet")) - landed
+    _sink(state_dir)(
+        spark.read.schema(INVENTORY_STREAM_SCHEMA).parquet(str(b_file)), 1
+    )
+    assert committed_version(spark, state_dir, _PARTS) == 1
+    assert read_state(spark, state_dir)["n_rows"] == 65
     # CRASH here: checkpoint never committed batch 1
 
     q2 = stream_table_checksum(spark, inv_dir, state_dir, ckpt)
@@ -122,14 +110,46 @@ def test_crash_between_state_commit_and_checkpoint_commit(spark, tmp_path):
     assert got["n_rows"] == expect["n_rows"] == 65
     assert got["total_size"] == expect["total_size"]
     assert got["checksum"] == expect["checksum"]
-    assert got["last_batch_id"] == 1
+
+
+def test_checkpoint_replacement_counts_a_new_drop_once(spark, tmp_path):
+    """A replaced checkpoint renumbers batches from 0: a drop that lands
+    after the loss rides batch 0 together with every re-listed old file. It
+    must count exactly once and the old files not at all (a batch-id guard
+    skipped the whole batch: n_rows 100 against 107)."""
+    import shutil
+
+    inv_dir = str(tmp_path / "inv")
+    state_dir = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    for tag, n in (("a", 50), ("b", 35), ("c", 15)):
+        spark.createDataFrame(_mk_rows(tag, n), INVENTORY_STREAM_SCHEMA).coalesce(
+            1
+        ).write.mode("append").parquet(inv_dir)
+    stream_table_checksum(
+        spark, inv_dir, state_dir, ckpt, max_files_per_trigger=1
+    ).awaitTermination(120)
+    assert read_state(spark, state_dir)["n_rows"] == 100
+
+    shutil.rmtree(ckpt)
+    spark.createDataFrame(_mk_rows("d", 7), INVENTORY_STREAM_SCHEMA).coalesce(
+        1
+    ).write.mode("append").parquet(inv_dir)
+    stream_table_checksum(spark, inv_dir, state_dir, ckpt).awaitTermination(120)
+
+    got = read_state(spark, state_dir)
+    expect = batch_equivalent(spark, inv_dir)
+    assert got["n_rows"] == expect["n_rows"] == 107
+    assert got["total_size"] == expect["total_size"]
+    assert got["checksum"] == expect["checksum"]
 
 
 def test_torn_state_dir_fails_loudly(spark, tmp_path):
-    """A crash INSIDE the state overwrite leaves a torn dir (data files
-    gone/garbage). read_state must propagate the read error — treating it
-    as 'no state' would silently reset the fingerprint AND the batch guard,
-    double-applying all history on the retry."""
+    """A torn state (the committed version's data files, or the meta
+    pointer, gone or garbage) must propagate the read error — treating it
+    as 'no state' would silently reset the fingerprint AND the applied-files
+    log, double-applying all history on the retry. The same for a state dir
+    of the older single-row layout: bare parquet, no meta."""
     from pathlib import Path
 
     import pytest
@@ -143,8 +163,22 @@ def test_torn_state_dir_fails_loudly(spark, tmp_path):
     q = stream_table_checksum(spark, inv_dir, state_dir, ckpt)
     q.awaitTermination(120)
 
-    for f in Path(state_dir).glob("*.parquet"):
-        f.unlink()
-    (Path(state_dir) / "part-torn.parquet").write_bytes(b"not parquet")
-    with pytest.raises(Exception):
-        read_state(spark, state_dir)
+    for sub in ("counts_v0", "meta"):
+        torn = Path(state_dir) / sub
+        saved = {f: f.read_bytes() for f in torn.glob("*.parquet")}
+        for f in saved:
+            f.unlink()
+        (torn / "part-torn.parquet").write_bytes(b"not parquet")
+        with pytest.raises(Exception):
+            read_state(spark, state_dir)
+        (torn / "part-torn.parquet").unlink()
+        for f, data in saved.items():
+            f.write_bytes(data)
+    assert read_state(spark, state_dir)["n_rows"] == 10
+
+    legacy = str(tmp_path / "legacy")
+    spark.createDataFrame(
+        [(10, 1, 1, 0)], "n_rows long, total_size long, checksum long, last_batch_id long"
+    ).write.parquet(legacy)
+    with pytest.raises(ValueError, match="no meta"):
+        read_state(spark, legacy)

@@ -17,7 +17,8 @@ from s3bigdatasync_spark.streaming.dedup_gate import (
     read_dedup_state,
     stream_dedup_state,
 )
-from s3bigdatasync_spark.streaming.drift import _read_meta
+from s3bigdatasync_spark.streaming.commit import committed_version
+from s3bigdatasync_spark.streaming.segments import _PARTS
 
 
 def _mk_docs(tag: str, n: int, dup_every: int = 3):
@@ -179,12 +180,12 @@ def test_duplicate_batch_is_skipped(spark, tmp_path):
     ).write.mode("append").parquet(docs_dir)
     q = stream_dedup_state(spark, docs_dir, state_dir, ckpt)
     q.awaitTermination(120)
-    before_meta = _read_meta(spark, state_dir)
+    before_meta = committed_version(spark, state_dir, _PARTS)
     before = _rows(dedup_state(spark, state_dir))
 
     q2 = stream_dedup_state(spark, docs_dir, state_dir, ckpt)
     q2.awaitTermination(120)
-    assert _read_meta(spark, state_dir) == before_meta
+    assert committed_version(spark, state_dir, _PARTS) == before_meta
     assert _rows(dedup_state(spark, state_dir)) == before
 
 
@@ -223,7 +224,6 @@ def test_crash_between_segment_commit_and_meta_flip(spark, tmp_path):
 
     from s3bigdatasync_spark.streaming.dedup_gate import _BUCKET, _hash_counts
     from s3bigdatasync_spark.streaming.segments import (
-        _SEG_PREFIXES,
         _read_manifest,
     )
 
@@ -236,7 +236,7 @@ def test_crash_between_segment_commit_and_meta_flip(spark, tmp_path):
     ).write.mode("append").parquet(docs_dir)
     q = stream_dedup_state(spark, docs_dir, state_dir, ckpt)
     q.awaitTermination(120)
-    assert _read_meta(spark, state_dir, _SEG_PREFIXES) == 0
+    assert committed_version(spark, state_dir, _PARTS) == 0
     state_v0 = _rows(dedup_state(spark, state_dir))
     manifest_v0 = _read_manifest(spark, state_dir)
 
@@ -262,12 +262,12 @@ def test_crash_between_segment_commit_and_meta_flip(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{state_dir}/manifest_v1")
     # CRASH here: no meta flip
 
-    assert _read_meta(spark, state_dir, _SEG_PREFIXES) == 0
+    assert committed_version(spark, state_dir, _PARTS) == 0
     assert _rows(dedup_state(spark, state_dir)) == state_v0  # v1 unreachable
 
     q2 = stream_dedup_state(spark, docs_dir, state_dir, ckpt)
     q2.awaitTermination(120)
-    assert _read_meta(spark, state_dir, _SEG_PREFIXES) == 1
+    assert committed_version(spark, state_dir, _PARTS) == 1
     assert _rows(dedup_state(spark, state_dir)) == _rows(
         batch_equivalent(spark, docs_dir)
     )
@@ -282,8 +282,6 @@ def test_meta_loss_recovery_segmented(spark, tmp_path):
     import shutil
     from pathlib import Path
 
-    from s3bigdatasync_spark.streaming.segments import _SEG_PREFIXES
-
     docs_dir = str(tmp_path / "docs")
     state_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
@@ -294,12 +292,12 @@ def test_meta_loss_recovery_segmented(spark, tmp_path):
         ).write.mode("append").parquet(docs_dir)
         q = stream_dedup_state(spark, docs_dir, state_dir, ckpt)
         q.awaitTermination(120)
-    assert _read_meta(spark, state_dir, _SEG_PREFIXES) == 1
+    assert committed_version(spark, state_dir, _PARTS) == 1
     before = _rows(dedup_state(spark, state_dir))
 
     # crash mid-pointer-overwrite: meta dir gone, everything else intact
     shutil.rmtree(Path(state_dir) / "meta")
-    assert _read_meta(spark, state_dir, _SEG_PREFIXES) == 1  # recovery scan
+    assert committed_version(spark, state_dir, _PARTS) == 1  # recovery scan
     assert _rows(dedup_state(spark, state_dir)) == before
 
     # and the next drain proceeds normally from the recovered version
@@ -308,7 +306,7 @@ def test_meta_loss_recovery_segmented(spark, tmp_path):
     ).write.mode("append").parquet(docs_dir)
     q = stream_dedup_state(spark, docs_dir, state_dir, ckpt)
     q.awaitTermination(120)
-    assert _read_meta(spark, state_dir, _SEG_PREFIXES) == 2
+    assert committed_version(spark, state_dir, _PARTS) == 2
     assert _rows(dedup_state(spark, state_dir)) == _rows(
         batch_equivalent(spark, docs_dir)
     )

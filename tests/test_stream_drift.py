@@ -5,9 +5,10 @@ nothing. Also pins the versioned-state idempotence on retry."""
 
 from __future__ import annotations
 
+from s3bigdatasync_spark.streaming.commit import committed_version
 from s3bigdatasync_spark.streaming.drift import (
     DOCS_STREAM_SCHEMA,
-    _read_meta,
+    _PARTS,
     batch_equivalent,
     drift_report,
     read_counts,
@@ -85,13 +86,13 @@ def test_duplicate_batch_is_skipped(spark, tmp_path):
     ).write.mode("append").parquet(docs_dir)
     q = stream_source_drift(spark, docs_dir, state_dir, ckpt)
     q.awaitTermination(120)
-    before_meta = _read_meta(spark, state_dir)
+    before_meta = committed_version(spark, state_dir, _PARTS)
     before = _report_rows(drift_report(spark, state_dir))
     assert before_meta >= 0
 
     q2 = stream_source_drift(spark, docs_dir, state_dir, ckpt)
     q2.awaitTermination(120)
-    assert _read_meta(spark, state_dir) == before_meta
+    assert committed_version(spark, state_dir, _PARTS) == before_meta
     assert _report_rows(drift_report(spark, state_dir)) == before
 
 
@@ -145,7 +146,7 @@ def test_meta_loss_recovery(spark, tmp_path):
     shutil.rmtree(f"{state_dir}/meta")  # crash inside the pointer overwrite
     got = _report_rows(drift_report(spark, state_dir))
     assert got == _report_rows(batch_equivalent(spark, docs_dir))
-    assert _read_meta(spark, state_dir) >= 0  # recovered, not bootstrapped
+    assert committed_version(spark, state_dir, _PARTS) >= 0  # recovered, not bootstrapped
 
     # the next round merges ON TOP of the recovered state under the intact
     # checkpoint (old files are not re-delivered — state had to survive)
@@ -178,7 +179,7 @@ def test_crash_between_counts_commit_and_meta_flip(spark, tmp_path):
     ).parquet(docs_dir)
     q = stream_source_drift(spark, docs_dir, state_dir, ckpt)
     q.awaitTermination(120)
-    assert _read_meta(spark, state_dir) == 0
+    assert committed_version(spark, state_dir, _PARTS) == 0
     report_v0 = _report_rows(drift_report(spark, state_dir))
 
     # drop B lands; its batch CRASHES after writing counts_v1/files_v1
@@ -208,13 +209,13 @@ def test_crash_between_counts_commit_and_meta_flip(spark, tmp_path):
     # CRASH here: no meta flip
 
     # the half-committed v1 is unreachable — reads stay on v0
-    assert _read_meta(spark, state_dir) == 0
+    assert committed_version(spark, state_dir, _PARTS) == 0
     assert _report_rows(drift_report(spark, state_dir)) == report_v0
 
     # restart: the checkpoint redelivers B; the sink overwrites the orphaned
     # v1 and flips meta. Exactly once, end to end.
     q2 = stream_source_drift(spark, docs_dir, state_dir, ckpt)
     q2.awaitTermination(120)
-    assert _read_meta(spark, state_dir) == 1
+    assert committed_version(spark, state_dir, _PARTS) == 1
     got = _report_rows(drift_report(spark, state_dir))
     assert got == _report_rows(batch_equivalent(spark, docs_dir))

@@ -7,7 +7,8 @@ one kill test pins that the shared machinery holds for this key shape too."""
 
 from __future__ import annotations
 
-from s3bigdatasync_spark.streaming.drift import _read_meta
+from s3bigdatasync_spark.streaming.commit import committed_version
+from s3bigdatasync_spark.streaming.drift import _PARTS
 from s3bigdatasync_spark.streaming.ppl_gate import (
     DOCS_STREAM_SCHEMA,
     batch_equivalent,
@@ -184,7 +185,7 @@ def test_crash_between_counts_commit_and_meta_flip(spark, tmp_path):
     ).write.mode("append").parquet(docs_dir)
     q = stream_ppl_state(spark, docs_dir, state_dir, ckpt)
     q.awaitTermination(120)
-    assert _read_meta(spark, state_dir) == 0
+    assert committed_version(spark, state_dir, _PARTS) == 0
     scores_v0 = _rows(ppl_scores(spark, state_dir, _landed(spark, docs_dir)))
 
     # drop B lands; its batch crashes after the counts/files writes but
@@ -208,7 +209,7 @@ def test_crash_between_counts_commit_and_meta_flip(spark, tmp_path):
     ).parquet(f"{state_dir}/files_v1")
     # CRASH here: no meta flip
 
-    assert _read_meta(spark, state_dir) == 0
+    assert committed_version(spark, state_dir, _PARTS) == 0
     # scoring drop A against the still-v0 state is unchanged
     a_only = _landed(spark, docs_dir).join(
         fresh.select("doc_id"), "doc_id", "left_anti"
@@ -217,6 +218,6 @@ def test_crash_between_counts_commit_and_meta_flip(spark, tmp_path):
 
     q2 = stream_ppl_state(spark, docs_dir, state_dir, ckpt)
     q2.awaitTermination(120)
-    assert _read_meta(spark, state_dir) == 1
+    assert committed_version(spark, state_dir, _PARTS) == 1
     got = _rows(ppl_scores(spark, state_dir, _landed(spark, docs_dir)))
     assert got == _rows(batch_equivalent(spark, docs_dir))

@@ -179,57 +179,9 @@ def test_zero_candidate_record_logged_once(spark, tmp_path):
     assert read_match_log(spark, log_dir).count() == 2
 
 
-def test_legacy_log_migration(spark, tmp_path):
-    """A log written BEFORE dirty_name joined _LOG_SCHEMA reads back with
-    dirty_name=NULL; the null-unsafe pair anti-join would re-match every
-    legacy record on redelivery and the log would diverge from
-    batch_equivalent forever (round-4 ADVICE). migrate_legacy_log recomputes
-    the legacy ids' verdicts from the dirty source; after a full-feed
-    redelivery the log must still equal the batch matcher."""
-    import shutil
-
-    from s3bigdatasync_spark.streaming.resolve import migrate_legacy_log
-
-    dirty_dir = str(tmp_path / "dirty")
-    log_dir = str(tmp_path / "log")
-    ckpt = str(tmp_path / "ckpt")
-    cat = _catalog_df(spark)
-
-    feed = [
-        _drop("amber bronze copper dim", 0),
-        _drop("lavender rose mint sky", 1),
-        (2000, "zzzzzzzzzzzzzzzzzzzzzz"),  # zero-candidate record
-    ]
-    spark.createDataFrame(feed, DIRTY_STREAM_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(dirty_dir)
-
-    # fabricate the legacy on-disk state: the verdicts WITHOUT dirty_name
-    # (the pre-pair-identity schema), one row per dirty_id
-    batch_equivalent(spark, dirty_dir, cat).drop("dirty_name").withColumn(
-        "batch_id", F.lit(0).cast("long")
-    ).coalesce(1).write.mode("append").parquet(log_dir)
-    assert read_match_log(spark, log_dir).where(
-        F.col("dirty_name").isNull()
-    ).count() == len(feed)
-
-    assert migrate_legacy_log(spark, log_dir, dirty_dir, cat) is True
-    assert migrate_legacy_log(spark, log_dir, dirty_dir, cat) is False  # idempotent
-
-    # redeliver the whole feed (fresh checkpoint = every file re-delivers)
-    q = stream_resolve(spark, dirty_dir, cat, log_dir, ckpt)
-    q.awaitTermination(120)
-
-    log = read_match_log(spark, log_dir)
-    got = sorted(tuple(r) for r in log.drop("batch_id").collect())
-    want = sorted(tuple(r) for r in batch_equivalent(spark, dirty_dir, cat).collect())
-    assert got == want  # nothing re-matched, nothing lost
-    assert log.where(F.col("dirty_name").isNull()).count() == 0
-
-
 def test_unmigrated_legacy_log_fails_loudly(spark, tmp_path):
-    """Streaming over an unmigrated legacy log must refuse to run (naming
-    the migration step), never silently double-append. The probe fires at
+    """Streaming over a legacy log must refuse to run (saying to rebuild
+    the log), never silently double-append. The probe fires at
     stream START (the sink can never write a NULL-name row itself, so a
     clean log cannot become legacy mid-stream) — the failure surfaces
     before any micro-batch runs."""
@@ -248,7 +200,7 @@ def test_unmigrated_legacy_log_fails_loudly(spark, tmp_path):
         "batch_id", F.lit(0).cast("long")
     ).coalesce(1).write.mode("append").parquet(log_dir)
 
-    with pytest.raises(RuntimeError, match="migrate_legacy_log"):
+    with pytest.raises(RuntimeError, match="rebuild the log from the dirty feed"):
         stream_resolve(spark, dirty_dir, cat, log_dir, ckpt)
 
 
@@ -325,80 +277,3 @@ def test_null_name_record_does_not_brick_or_duplicate(spark, tmp_path):
         assert len(null_rows) == 1
         assert null_rows[0]["dirty_name"] == ""
         assert null_rows[0]["n_candidates"] == 0
-
-
-def test_migration_crash_windows_detected_and_recovered(spark, tmp_path):
-    """r6 ADVICE: a crash during migrate_legacy_log's final overwrite used
-    to leave the live log truncated with nothing detecting it. The staging
-    dir is now a durable incompleteness marker — removed only after the
-    overwrite succeeds. Three windows:
-
-      (a) staged complete + live log truncated (crash mid-overwrite):
-          read_match_log refuses; recover_migration replays the overwrite
-          from the staged copy and the log equals the batch matcher;
-      (b) staged partial, no _SUCCESS (crash mid-stage): live log was never
-          touched; recover_migration rolls the stage back and the original
-          log serves intact;
-      (c) a successful migration leaves NO staging dir (the marker cannot
-          false-positive on the happy path)."""
-    import shutil
-    from pathlib import Path
-
-    import pytest
-
-    from s3bigdatasync_spark.streaming.resolve import (
-        _staged_dir,
-        migrate_legacy_log,
-        recover_migration,
-    )
-
-    dirty_dir = str(tmp_path / "dirty")
-    log_dir = str(tmp_path / "log")
-    cat = _catalog_df(spark)
-    feed = [
-        _drop("amber bronze copper dim", 0),
-        _drop("lavender rose mint sky", 1),
-    ]
-    spark.createDataFrame(feed, DIRTY_STREAM_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(dirty_dir)
-    batch_equivalent(spark, dirty_dir, cat).drop("dirty_name").withColumn(
-        "batch_id", F.lit(0).cast("long")
-    ).coalesce(1).write.mode("append").parquet(log_dir)
-
-    # (c) happy path: migration leaves no stage behind
-    assert migrate_legacy_log(spark, log_dir, dirty_dir, cat) is True
-    staged = Path(_staged_dir(log_dir))
-    assert not staged.exists()
-    want = sorted(
-        tuple(r)
-        for r in read_match_log(spark, log_dir).drop("batch_id").collect()
-    )
-
-    # (a) crash mid-FINAL-overwrite: staged copy complete, live log torn
-    shutil.copytree(log_dir, staged)  # a complete stage (has _SUCCESS)
-    for f in list(Path(log_dir).glob("*.parquet"))[:1]:
-        f.unlink()  # the overwrite died partway: a data file is gone
-    with pytest.raises(RuntimeError, match="recover_migration"):
-        read_match_log(spark, log_dir)
-    assert recover_migration(spark, log_dir) == "completed"
-    assert not staged.exists()
-    got = sorted(
-        tuple(r)
-        for r in read_match_log(spark, log_dir).drop("batch_id").collect()
-    )
-    assert got == want
-
-    # (b) crash mid-STAGE-write: no _SUCCESS, live log untouched
-    staged.mkdir()
-    (staged / "part-00000.parquet").write_bytes(b"torn")
-    with pytest.raises(RuntimeError, match="recover_migration"):
-        read_match_log(spark, log_dir)
-    assert recover_migration(spark, log_dir) == "rolled_back"
-    assert not staged.exists()
-    got = sorted(
-        tuple(r)
-        for r in read_match_log(spark, log_dir).drop("batch_id").collect()
-    )
-    assert got == want
-    assert recover_migration(spark, log_dir) == "noop"

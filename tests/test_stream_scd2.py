@@ -9,7 +9,6 @@ import shutil
 from s3bigdatasync_spark.operators.timeline import collapse_runs
 from s3bigdatasync_spark.streaming.scd2 import (
     SNAPSHOT_STREAM_SCHEMA,
-    migrate_flat_layout,
     read_runs,
     stream_snapshot_history,
 )
@@ -101,61 +100,38 @@ def test_meta_loss_recovery(spark, tmp_path):
     assert _runs_set(read_runs(spark, runs_dir)) == _runs_set(collapse_runs(versions))
 
 
-def _mk_flat_legacy(spark, tmp_path):
+def test_flat_layout_fails_loudly(spark, tmp_path):
+    """A run table in the flat layout that predates the pointer swap (bare
+    parquet files, no meta, no runs_v* dirs) must raise, naming the layout,
+    without a Spark job — read as empty it would regress the max(v_to)
+    watermark and re-apply all history (round-3 ADVICE). The stream refuses
+    it too, and nothing is written into the dir."""
+    from pathlib import Path
+
+    import pytest
+
+    from .test_pipeline import _in_job_group
+
+    snaps = str(tmp_path / "snaps")
     runs_dir = str(tmp_path / "runs")
-    v12 = spark.createDataFrame(
+    versions = spark.createDataFrame(
         [r for r in ROWS if r[1] <= 2], "key string, v int, etag string, size long"
     )
-    legacy = collapse_runs(v12).select("key", "run_id", "etag", "v_from", "v_to", "size")
-    legacy.coalesce(1).write.mode("overwrite").parquet(runs_dir)  # flat layout
-    return runs_dir, legacy
+    collapse_runs(versions).coalesce(1).write.parquet(runs_dir)
 
+    def read():
+        with pytest.raises(ValueError, match="flat layout"):
+            read_runs(spark, runs_dir)
 
-def test_legacy_flat_layout_reads_in_place(spark, tmp_path):
-    """A run table written by the pre-pointer FLAT layout (bare parquet files,
-    no meta, no runs_v* dirs) must read in place — silently treating it as
-    empty would regress the watermark and re-apply history (round-3 ADVICE).
-    And read_runs must stay READ-ONLY: no meta/runs_v0 side effects (round-3
-    ADVICE follow-up — a read that writes races concurrent readers)."""
-    from pathlib import Path
-
-    runs_dir, legacy = _mk_flat_legacy(spark, tmp_path)
-    assert _runs_set(read_runs(spark, runs_dir)) == _runs_set(legacy)
-    # two concurrent-reader-safe reads, zero writes
-    assert _runs_set(read_runs(spark, runs_dir)) == _runs_set(legacy)
-    assert not (Path(runs_dir) / "meta").exists()
-    assert not (Path(runs_dir) / "runs_v0").exists()
-
-
-def test_explicit_flat_migration(spark, tmp_path):
-    """migrate_flat_layout is the explicit admin step: flat -> runs_v0+meta,
-    idempotent, and a no-op on already-versioned tables."""
-    from pathlib import Path
-
-    runs_dir, legacy = _mk_flat_legacy(spark, tmp_path)
-    assert migrate_flat_layout(spark, runs_dir) is True
-    assert (Path(runs_dir) / "meta").exists()
-    assert _runs_set(read_runs(spark, runs_dir)) == _runs_set(legacy)
-    assert migrate_flat_layout(spark, runs_dir) is False  # second call: no-op
-
-
-def test_flat_layout_migrates_on_write(spark, tmp_path):
-    """Without the explicit step, the WRITE path lands the migration: the
-    sink merges on top of the flat state and its pointer flip creates
-    runs_v0 — the flat table's watermark still skips re-delivered v1/v2."""
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    runs_dir, _ = _mk_flat_legacy(spark, tmp_path)
+    assert _in_job_group(spark, read)[1] == 0
 
     spark.createDataFrame(ROWS, SNAPSHOT_STREAM_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(snaps)
-    q = stream_snapshot_history(spark, snaps, runs_dir, ckpt)
-    q.awaitTermination(120)
-    versions = spark.createDataFrame(
-        ROWS, "key string, v int, etag string, size long"
-    )
-    assert _runs_set(read_runs(spark, runs_dir)) == _runs_set(collapse_runs(versions))
+    q = stream_snapshot_history(spark, snaps, runs_dir, str(tmp_path / "ckpt"))
+    with pytest.raises(Exception, match="flat layout"):
+        q.awaitTermination(120)
+    assert sorted(p.name for p in Path(runs_dir).iterdir() if p.is_dir()) == []
 
 
 def test_deep_backlog_batch_folds_without_planning_cliff(spark, tmp_path):

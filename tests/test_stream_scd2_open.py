@@ -140,8 +140,8 @@ def test_replay_and_crash_window_are_exactly_once(spark, tmp_path):
     """Re-draining with no new files is a no-op; the segments crash window
     (all data writes committed, no meta flip) leaves the old state
     reachable and the replayed batch lands exactly once."""
-    from s3bigdatasync_spark.streaming.drift import _read_meta
-    from s3bigdatasync_spark.streaming.segments import _SEG_PREFIXES
+    from s3bigdatasync_spark.streaming.commit import committed_version
+    from s3bigdatasync_spark.streaming.segments import _PARTS
 
     snaps = str(tmp_path / "snaps")
     state_dir = str(tmp_path / "state")
@@ -149,11 +149,11 @@ def test_replay_and_crash_window_are_exactly_once(spark, tmp_path):
 
     _append(spark, snaps, {1})
     _drain(spark, snaps, state_dir, ckpt)
-    before_meta = _read_meta(spark, state_dir, _SEG_PREFIXES)
+    before_meta = committed_version(spark, state_dir, _PARTS)
     before = _norm(_runs_set(read_runs_closed(spark, state_dir)))
 
     _drain(spark, snaps, state_dir, ckpt)  # nothing new
-    assert _read_meta(spark, state_dir, _SEG_PREFIXES) == before_meta
+    assert committed_version(spark, state_dir, _PARTS) == before_meta
     assert _norm(_runs_set(read_runs_closed(spark, state_dir))) == before
 
     _append(spark, snaps, {2, 3})
@@ -175,13 +175,13 @@ def test_crash_between_segment_commit_and_meta_flip(spark, tmp_path):
     exactly once — no doubled events, no moved watermark."""
     from pyspark.sql import functions as F  # noqa: F811
 
-    from s3bigdatasync_spark.streaming.drift import _read_meta
+    from s3bigdatasync_spark.streaming.commit import committed_version
     from s3bigdatasync_spark.streaming.scd2_open import (
         _bucket,
         _make_events_fn,
     )
     from s3bigdatasync_spark.streaming.segments import (
-        _SEG_PREFIXES,
+        _PARTS,
         _read_manifest,
     )
 
@@ -191,7 +191,7 @@ def test_crash_between_segment_commit_and_meta_flip(spark, tmp_path):
 
     _append(spark, snaps, {1})
     _drain(spark, snaps, state_dir, ckpt)
-    assert _read_meta(spark, state_dir, _SEG_PREFIXES) == 0
+    assert committed_version(spark, state_dir, _PARTS) == 0
     state_v0 = _norm(_runs_set(read_runs_closed(spark, state_dir)))
     manifest_v0 = _read_manifest(spark, state_dir)
 
@@ -214,13 +214,53 @@ def test_crash_between_segment_commit_and_meta_flip(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{state_dir}/manifest_v1")
     # CRASH here: no meta flip
 
-    assert _read_meta(spark, state_dir, _SEG_PREFIXES) == 0
+    assert committed_version(spark, state_dir, _PARTS) == 0
     assert read_watermark(spark, state_dir) == 1  # v1 events unreachable
     assert _norm(_runs_set(read_runs_closed(spark, state_dir))) == state_v0
 
     _drain(spark, snaps, state_dir, ckpt)  # the redelivery
-    assert _read_meta(spark, state_dir, _SEG_PREFIXES) == 1
+    assert committed_version(spark, state_dir, _PARTS) == 1
     assert read_watermark(spark, state_dir) == 3
     assert _norm(_runs_set(read_runs_closed(spark, state_dir))) == _batch_expected(
         spark, {1, 2, 3}
+    )
+
+
+def test_deep_backlog_batch_folds_without_planning_cliff(spark, tmp_path):
+    """The open-run merge folds each version of a batch over the previous
+    fold's output, which references the state several times; without the
+    per-version eager localCheckpoint a batch carrying k versions plans
+    O(c^k) state subtrees (the scd2.py planning cliff). Pin: 12 versions in
+    ONE trigger complete promptly and the closed form matches
+    collapse_runs."""
+    import time
+
+    snaps = str(tmp_path / "snaps")
+    state_dir = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+
+    rows = []
+    for v in range(1, 13):
+        for k in range(6):
+            # key k churns its etag at versions where (k + v) % 5 == 0
+            gen = max([0] + [u for u in range(1, v + 1) if (k + u) % 5 == 0])
+            rows.append((f"k{k}", v, f"{k}:{gen}", 100 + k))
+    for v in range(1, 13):
+        spark.createDataFrame(
+            [r for r in rows if r[1] == v], SNAPSHOT_STREAM_SCHEMA
+        ).coalesce(1).write.mode("append").parquet(snaps)
+
+    t0 = time.perf_counter()
+    stream_snapshot_history_open(
+        spark, snaps, state_dir, ckpt, max_files_per_trigger=12
+    ).awaitTermination(300)
+    elapsed = time.perf_counter() - t0
+    assert elapsed < 240, f"deep-backlog drain took {elapsed:.0f}s"
+
+    assert read_watermark(spark, state_dir) == 12
+    versions = spark.createDataFrame(
+        rows, "key string, v int, etag string, size long"
+    )
+    assert _norm(_runs_set(read_runs_closed(spark, state_dir))) == _norm(
+        _runs_set(collapse_runs(versions))
     )
