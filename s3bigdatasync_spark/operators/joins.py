@@ -12,6 +12,8 @@ are real relational joins so Catalyst picks the physical strategy:
                            classified with a single CASE. At 100 TB: partition
                            both inventories by bucket/key-prefix at write time
                            so the diff co-locates without a full shuffle.
+                           Stored once per inventory snapshot (_diff_base):
+                           every diff query reads the changed objects only.
   * J5 verification join — metadata-compare; broadcast the part-geometry side.
 """
 
@@ -20,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from . import prepared, scoped_cache
+from . import prepared, scoped_cache, snapshot_memo
 from .prefix import load_table_layout, with_global_order
 from ..views import oracle_cte
 
@@ -222,9 +224,25 @@ def diff_kernel(src: DataFrame, dst: DataFrame) -> DataFrame:
 
 def _diff_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 diff base over the full snapshots — shared by inventory_diff,
-    diff_apply_check and the cost rollup (operators/cost.py)."""
-    spark = prepared(spark, sf_dir)
-    return diff_kernel(spark.table("inventory_src"), spark.table("inventory_dst"))
+    diff_summary, diff_apply_check and the cost rollup (operators/cost.py).
+
+    Stored once per snapshot of both inventories (operators.snapshot_memo,
+    keyed on the files of `inventory_src` and `inventory_dst`) as a lazily
+    filled persist(): building any of those queries runs no Spark job, the
+    first action runs the full outer join, and every later diff query over
+    the same files reads the stored rows. Scale: the stored relation is
+    O(changed objects), not O(inventory), and a persisted relation spills
+    to disk under memory pressure. A store under a plan dir, which the
+    reference's queue-fed producer implies, waits for the restartable sync
+    (ROADMAP direction 1)."""
+
+    def build() -> DataFrame:
+        p = prepared(spark, sf_dir)
+        return diff_kernel(p.table("inventory_src"), p.table("inventory_dst")).persist()
+
+    return snapshot_memo(
+        "inventory_diff", spark, sf_dir, build, views=("inventory_src", "inventory_dst")
+    )
 
 
 def inventory_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -266,9 +284,10 @@ def diff_apply_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     One-row report — n_missing/n_extra MUST be 0 and invertible true; a
     nonzero value at production scale means the diff and the copier disagree
     about object identity (the class of bug the reference can't detect).
-    Scale: reuses the diff's single shuffle; the anti-joins co-partition on
-    the same key. One plan of cross-joined one-row counts: building it runs
-    no Spark job."""
+    Scale: reads the stored diff (_diff_base), so the diff's full outer join
+    runs once per inventory snapshot; the anti-joins co-partition on the
+    same key. One plan of cross-joined one-row counts: building it runs no
+    Spark job."""
     p = prepared(spark, sf_dir)
     src = p.table("inventory_src").select("key", "size", "etag")
     dst = p.table("inventory_dst").select("key", "size", "etag")

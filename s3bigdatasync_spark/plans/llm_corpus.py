@@ -194,7 +194,9 @@ def corpus_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment reuses its labels instead of a second clustering pass, and
     those labels are the snapshot-scoped ones dedup_clusters stores, so a
     repeat of this query (or corpus_yield_report before it) over unchanged
-    files runs no clustering at all."""
+    files runs no clustering at all. The DSIR weights are stored per
+    documents snapshot too (curation.dsir_importance), so a repeat reads
+    them instead of re-tokenizing the corpus."""
     from ..operators.curation import _split_col, dsir_importance
 
     tc = training_corpus(spark, sf_dir)

@@ -15,7 +15,7 @@ its counts are Observation metrics of its own write.
 Not idempotent yet: copy_log and dead_letter are append-only, so a re-run
 over the same task store copies and logs every object again. Skipping
 logged objects (a copy_log anti-join, the operators.joins.dedup_anti_join
-pattern) is ROADMAP direction 2.
+pattern) is ROADMAP direction 1.
 """
 
 from __future__ import annotations

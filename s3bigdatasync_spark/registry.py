@@ -98,12 +98,12 @@ def _scoped(fn: Callable) -> Callable:
     Lazy release (at next-query construction, not at completion) because the
     caller materializes the returned DataFrame after the function returns;
     unpersisting earlier would recompute the shared subtrees the cache exists
-    for. Snapshot-scoped entries (the near-dup cluster labels) are kept: they
-    are checkpoints of one input snapshot, so the next query over the same
-    files reuses them. Inner composition (packs calling member functions,
-    operators calling operators) goes through the unwrapped module
-    functions, so a release happens exactly once per top-level registry
-    query."""
+    for. Snapshot-scoped entries (the near-dup cluster labels, the inventory
+    diff, the DSIR weights) are kept: they are stored per input snapshot,
+    so the next query over the same files reuses them. Inner composition
+    (packs calling member functions, operators calling operators) goes
+    through the unwrapped module functions, so a release happens exactly
+    once per top-level registry query."""
 
     @functools.wraps(fn)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -129,10 +129,10 @@ def full_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     constructing the next query — construction releases the previous query's
     query-scoped caches (see operators._SCOPED_CACHES). Violating it is safe
     but slow: results stay deterministic, the shared-subtree caching is lost.
-    Snapshot-scoped entries outlive the query: every clustering query over
-    the same documents files reuses one set of cluster labels until the
-    files change, the SparkContext restarts or operators.release_caches()
-    drains them."""
+    Snapshot-scoped entries outlive the query: every query over the same
+    input files reuses one set of cluster labels, one inventory diff and
+    one set of DSIR weights until the files change, the session or
+    SparkContext changes or operators.release_caches() drains them."""
     out = _merge(_MODULES, "QUERIES")
     out.update({n: _scoped(f) for n, f in packs.QUERIES.items()})
     return out

@@ -15,14 +15,15 @@ from . import operators, registry
 
 VIEW_SUFFIX = "_v"
 
-# (session id, sf_dir) -> registered view names. Construction builds all
-# ~175 query plans (some train models / collect boundaries at plan-build
-# time), ~100 s at sf0.001 — but temp views live in the session catalog, so
-# repeat registration for the same (session, sf_dir) is pure waste (the r8
-# suite paid it three times, 18% of the wall clock). Keyed by id() of the
-# SparkSession: a new session gets a fresh catalog AND a fresh id entry;
-# pass force=True after changing the underlying tables in place.
-_REGISTERED: dict[tuple[int, str], list[str]] = {}
+# (applicationId, sessionUUID, sf_dir) -> registered view names.
+# Construction builds all ~175 query plans (some train models / collect
+# boundaries at plan-build time), ~100 s at sf0.001 — but temp views live in
+# the session catalog, so repeat registration for the same (session, sf_dir)
+# is pure waste (the r8 suite paid it three times, 18% of the wall clock).
+# Keyed by operators.session_id: a new session (newSession() or a restarted
+# context) gets a fresh catalog AND a fresh key; pass force=True after
+# changing the underlying tables in place.
+_REGISTERED: dict[tuple[str, str, str], list[str]] = {}
 
 
 def referenced_queries(statement: str) -> list[str]:
@@ -69,15 +70,9 @@ def register_query_views(
         finally:
             operators.release_query_caches()
         return names
-    key = (id(spark), sf_dir)
+    key = (*operators.session_id(spark), sf_dir)
     if not force and key in _REGISTERED:
-        names = _REGISTERED[key]
-        # id() can be reused after a session is garbage-collected; unlike a
-        # pure cache this memo gates CATALOG state, so trust it only if the
-        # catalog actually holds a registered view (one cheap lookup —
-        # round-10 ADVICE).
-        if names and spark.catalog.tableExists(names[0]):
-            return names
+        return _REGISTERED[key]
     # Seed operators._PREPARED, not a bare register_all (round-10 ADVICE):
     # the pool below constructs queries that each call operators.prepared(),
     # and an unseeded memo would make the first ~8 concurrent constructions
@@ -109,7 +104,8 @@ def register_query_views(
     # caches accumulated across the ~185 raw constructions must still be
     # released — otherwise every one of them leaks into the session. Only
     # the query scope: the views read snapshot-scoped entries (the near-dup
-    # cluster labels), which must outlive registration.
+    # cluster labels, the inventory diff, the DSIR weights), which must
+    # outlive registration.
     try:
         with ThreadPoolExecutor(max_workers=8) as ex:
             names = list(ex.map(build, registry.raw_queries().items()))

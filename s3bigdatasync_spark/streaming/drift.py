@@ -145,19 +145,24 @@ def versioned_count_sink(
         # file-identity filter: a replaced checkpoint renumbers batches, so
         # rows from already-applied files must contribute nothing
         tagged = batch_df.withColumn("file_path", F.input_file_name())
-        fresh = tagged.join(applied, "file_path", "left_anti")
-        old = read_part(sp, state_dir, "counts", last, counts_schema)
-        merged = (
-            old.unionByName(count_fn(fresh))
-            .groupBy(*key_cols)
-            .agg(*merge_aggs)
-        )
-        files = applied.unionByName(fresh.select("file_path").distinct()).distinct()
-        # versioned dirs: the write target is never the read source, so the
-        # merge needs no localCheckpoint materialization
-        merged.write.mode("overwrite").parquet(part_path(state_dir, "counts", last + 1))
-        files.write.mode("overwrite").parquet(part_path(state_dir, "files", last + 1))
-        commit(sp, state_dir, last + 1, _PARTS)
+        # read by both writes below: persisted, so the batch's files are
+        # scanned and anti-joined once, not once per write
+        fresh = tagged.join(applied, "file_path", "left_anti").persist()
+        try:
+            old = read_part(sp, state_dir, "counts", last, counts_schema)
+            merged = (
+                old.unionByName(count_fn(fresh))
+                .groupBy(*key_cols)
+                .agg(*merge_aggs)
+            )
+            files = applied.unionByName(fresh.select("file_path")).distinct()
+            # versioned dirs: the write target is never the read source, so
+            # the merge needs no localCheckpoint materialization
+            merged.write.mode("overwrite").parquet(part_path(state_dir, "counts", last + 1))
+            files.write.mode("overwrite").parquet(part_path(state_dir, "files", last + 1))
+            commit(sp, state_dir, last + 1, _PARTS)
+        finally:
+            fresh.unpersist()
 
     return sink
 

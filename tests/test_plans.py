@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from s3bigdatasync_spark import registry, views
-from s3bigdatasync_spark.operators import _PREPARED
+from s3bigdatasync_spark.operators import _PREPARED, session_id
 
 _Q = registry.full_queries()
 
@@ -23,7 +23,7 @@ def pure_plans(spark, sf_dir):
     views.WIDEN_SMALL_SCANS = False
     views.register_all(spark, sf_dir)
     _PREPARED.clear()
-    _PREPARED.add((id(spark), sf_dir))
+    _PREPARED.add((*session_id(spark), sf_dir))
     yield
     views.WIDEN_SMALL_SCANS = True
     views.register_all(spark, sf_dir)

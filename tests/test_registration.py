@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from s3bigdatasync_spark import views
-from s3bigdatasync_spark.operators import _PREPARED
+from s3bigdatasync_spark.operators import _PREPARED, session_id
 
 from .conftest import SF_DIR, SF_SMALL
 from .test_pipeline import _in_job_group
@@ -30,7 +30,7 @@ def restore_views(spark):
     yield
     views.register_all(spark, SF_DIR)
     _PREPARED.clear()
-    _PREPARED.add((id(spark), SF_DIR))
+    _PREPARED.add((*session_id(spark), SF_DIR))
 
 
 @pytest.fixture(scope="module")

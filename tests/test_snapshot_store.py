@@ -1,9 +1,16 @@
-"""Snapshot-scoped near-dup cluster labels: the pair graph and the
-connected-components fixpoint run once per (SparkContext, sf_dir, documents
-files), and every clustering query over the same snapshot reuses them.
+"""The snapshot store (operators.snapshot_memo): a relation keyed by the
+files of the views it reads is built once per (SparkSession, sf_dir, file
+snapshot), and every query over the same snapshot reuses it —
+  * the near-dup cluster labels (`documents`): the pair graph and the
+    connected-components fixpoint;
+  * the src/dst inventory diff (`inventory_src`, `inventory_dst`), shared by
+    inventory_diff, diff_summary, transfer_cost_estimate, diff_apply_check;
+  * the DSIR importance weights (`documents`), read by
+    corpus_release_manifest.
 
 All tests run on a private copy of the sf0.001 tables, so rewriting
-`documents.parquet` never touches the shared testdata."""
+`documents.parquet` or `lineitem.parquet` never touches the shared
+testdata."""
 
 from __future__ import annotations
 
@@ -16,8 +23,10 @@ from concurrent.futures import ThreadPoolExecutor
 import pyarrow.parquet as pq
 import pytest
 
-from s3bigdatasync_spark import operators, registry
-from s3bigdatasync_spark.operators import dedup, release_caches
+from pyspark.storagelevel import StorageLevel
+
+from s3bigdatasync_spark import operators, registry, sql_views
+from s3bigdatasync_spark.operators import curation, dedup, joins, release_caches
 from s3bigdatasync_spark.views import register_all
 
 from .conftest import REPO, SF_DIR, SF_SMALL
@@ -36,6 +45,16 @@ CLUSTERING = [
     "corpus_release_manifest",
 ]
 BATCH = ("dedup_clusters", "corpus_yield_report", "corpus_release_manifest")
+# every registry query that reads the stored inventory diff
+DIFF = ("inventory_diff", "diff_summary", "transfer_cost_estimate", "diff_apply_check")
+# perfbench's sync_lifecycle planning leg
+PLANNING = (
+    "inventory_diff",
+    "diff_summary",
+    "transfer_cost_estimate",
+    "inventory_stats",
+    "verification_join",
+)
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -70,6 +89,35 @@ def builds(monkeypatch):
     return calls
 
 
+@pytest.fixture
+def stored(monkeypatch):
+    """Counts builds of the stored diff ("diff") and DSIR weights ("dsir")."""
+    calls = []
+    real_diff, real_dsir = joins.diff_kernel, curation._dsir_weights
+
+    def diff(src, dst):
+        calls.append("diff")
+        return real_diff(src, dst)
+
+    def dsir(spark, sf_dir):
+        calls.append("dsir")
+        return real_dsir(spark, sf_dir)
+
+    monkeypatch.setattr(joins, "diff_kernel", diff)
+    monkeypatch.setattr(curation, "_dsir_weights", dsir)
+    return calls
+
+
+def _persistent(spark) -> set[int]:
+    """Ids of the persisted RDDs (ids, not a count: a checkpoint an earlier
+    test dropped may be collected at any moment)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
 def _rows(df) -> list[tuple]:
     return sorted(tuple(r) for r in df.collect())
 
@@ -85,6 +133,21 @@ def _rewrite_documents(sf_dir: str) -> None:
         for i, s in zip(t.column("doc_id").to_pylist(), t.column("text").to_pylist())
     ]
     t = t.set_column(t.schema.get_field_index("text"), "text", [texts])
+    pq.write_table(t, path + ".tmp", row_group_size=t.num_rows)
+    os.replace(path + ".tmp", path)
+
+
+def _rewrite_lineitem(sf_dir: str) -> None:
+    """Flag every third line item as returned ('R'): its dst object drifts
+    in size and etag, so the diff gains Update rows. Written in place under
+    the same file name."""
+    path = os.path.join(sf_dir, "lineitem.parquet")
+    t = pq.read_table(path)
+    flags = [
+        "R" if i % 3 == 0 else f for i, f in enumerate(t.column("l_returnflag").to_pylist())
+    ]
+    i = t.schema.get_field_index("l_returnflag")
+    t = t.set_column(i, "l_returnflag", [flags])
     pq.write_table(t, path + ".tmp", row_group_size=t.num_rows)
     os.replace(path + ".tmp", path)
 
@@ -159,6 +222,142 @@ def test_warm_batch_job_budget(spark, sf_copy):
     assert dc_jobs <= 5
 
 
+def test_repeated_diff_and_dsir_calls_build_once(spark, sf_copy, stored):
+    """Four diff queries, each called twice, share one stored diff; three
+    DSIR readers share one stored set of weights. Every result matches its
+    DuckDB oracle."""
+    qs = registry.full_queries()
+    for name in DIFF + DIFF:
+        assert_match(qs[name](spark, sf_copy), _ORACLES[name], sf_copy)
+    assert stored == ["diff"]
+    for name in ("dsir_importance", "corpus_release_manifest", "corpus_release_manifest"):
+        assert_match(qs[name](spark, sf_copy), _ORACLES[name], sf_copy)
+    assert stored == ["diff", "dsir"]
+
+
+def test_rewritten_lineitem_is_a_diff_miss(spark, sf_copy, stored):
+    """A rewritten inventory file is a miss: the diff is built again, the
+    old entry is unpersisted (a rewritten file keeps its path, so a stale
+    entry left registered would answer for it), and every diff query
+    matches its oracle on the new files."""
+    qs = registry.full_queries()
+    ids = _persistent(spark)
+    before = _rows(qs["inventory_diff"](spark, sf_copy))
+    old_diff = _persistent(spark) - ids
+    _rewrite_lineitem(sf_copy)
+    register_all(spark, sf_copy)
+    after = _rows(qs["inventory_diff"](spark, sf_copy))
+    assert stored == ["diff", "diff"]
+    assert after != before  # the rewrite changed the diff
+    assert old_diff and not old_diff & _persistent(spark)
+    for name in DIFF:
+        assert_match(qs[name](spark, sf_copy), _ORACLES[name], sf_copy)
+    assert stored == ["diff", "diff"]
+
+
+def test_rewritten_documents_are_a_dsir_miss(spark, sf_copy, stored):
+    qs = registry.full_queries()
+    before = _rows(qs["dsir_importance"](spark, sf_copy))
+    _rewrite_documents(sf_copy)
+    register_all(spark, sf_copy)
+    after = qs["dsir_importance"](spark, sf_copy)
+    assert stored == ["dsir", "dsir"]
+    assert _rows(after) != before  # the rewrite changed the weights
+    for name in ("dsir_importance", "corpus_release_manifest"):
+        assert_match(qs[name](spark, sf_copy), _ORACLES[name], sf_copy)
+    assert stored == ["dsir", "dsir"]
+
+
+def test_building_stored_queries_runs_no_job(spark, sf_copy, stored):
+    """Building a query on an empty slot stores a lazy persist(): no Spark
+    job until the caller's action. corpus_release_manifest is built once the
+    cluster labels are stored (their fixpoint is eager by design), so its
+    build measures the DSIR store alone."""
+    qs = registry.full_queries()
+    qs["dedup_clusters"](spark, sf_copy).collect()
+    for name in DIFF + ("corpus_release_manifest",):
+        df, jobs = _in_job_group(spark, lambda: qs[name](spark, sf_copy))
+        assert jobs == 0, name
+        _noop(df)
+    assert stored == ["diff", "dsir"]  # built on the first call, then reused
+    for name in DIFF + ("corpus_release_manifest",):
+        _, jobs = _in_job_group(spark, lambda: qs[name](spark, sf_copy))
+        assert jobs == 0, name
+
+
+def test_warm_planning_and_release_job_budgets(spark, sf_copy):
+    """Warm, the planning leg reads one stored diff (22 jobs when each
+    query rebuilt it) and corpus_release_manifest one stored DSIR relation
+    (22 jobs when every call rebuilt it)."""
+    qs = registry.full_queries()
+    for name in PLANNING + ("corpus_release_manifest",):
+        _noop(qs[name](spark, sf_copy))
+    _, plan_jobs = _in_job_group(spark, lambda: [_noop(qs[n](spark, sf_copy)) for n in PLANNING])
+    _, crm_jobs = _in_job_group(
+        spark, lambda: _noop(qs["corpus_release_manifest"](spark, sf_copy))
+    )
+    assert plan_jobs <= 10
+    assert crm_jobs <= 12
+
+
+def test_release_leaves_no_persisted_relation(spark, sf_copy, stored):
+    """release_caches() unpersists the stored diff and DSIR relations at
+    once: nothing they (or the query scope) persisted is left."""
+    qs = registry.full_queries()
+    ids = _persistent(spark)
+    for name in DIFF + ("dsir_importance",):
+        _noop(qs[name](spark, sf_copy))
+    added = _persistent(spark) - ids
+    assert added
+    entries = [v for _, v in operators._SNAPSHOT.values()]
+    assert release_caches() >= 2
+    assert not operators._SNAPSHOT
+    assert all(df.storageLevel == StorageLevel.NONE for df in entries)
+    assert not added & _persistent(spark)
+
+
+def test_new_session_registers_again(spark, sf_copy, monkeypatch):
+    """operators.prepared and sql_views' registration memo are keyed by
+    (applicationId, sessionUUID): a session from newSession() has its own
+    temp views, so it registers again; the same session does not."""
+    regs = []
+    real_register = operators.register_all
+
+    def counting(s, d):
+        regs.append(operators.session_id(s))
+        return real_register(s, d)
+
+    monkeypatch.setattr(operators, "register_all", counting)
+    operators.prepared(spark, sf_copy)
+    regs.clear()
+    operators.prepared(spark, sf_copy)
+    assert regs == []
+    other = spark.newSession()
+    operators.prepared(other, sf_copy)
+    assert regs == [operators.session_id(other)] != [operators.session_id(spark)]
+    assert other.catalog.tableExists("inventory_src")
+
+    built = []
+    real_query = registry.raw_queries()["verification_join"]
+
+    def one_query():
+        return {"verification_join": lambda s, d: built.append(s) or real_query(s, d)}
+
+    monkeypatch.setattr(registry, "raw_queries", one_query)
+    saved = dict(sql_views._REGISTERED)
+    try:
+        a, b = spark.newSession(), spark.newSession()
+        assert sql_views.register_query_views(a, sf_copy) == ["verification_join_v"]
+        sql_views.register_query_views(a, sf_copy)
+        assert built == [a]
+        sql_views.register_query_views(b, sf_copy)
+        assert built == [a, b]
+        assert b.catalog.tableExists("verification_join_v")
+    finally:
+        sql_views._REGISTERED.clear()
+        sql_views._REGISTERED.update(saved)
+
+
 _RESTART = r"""
 import sys
 sys.path.insert(0, {repo!r})
@@ -169,22 +368,26 @@ from s3bigdatasync_spark.session import get_spark
 calls = []
 real = dedup._cc_labels
 dedup._cc_labels = lambda edges, what: calls.append(what) or real(edges, what)
+regs = []
+real_register = operators.register_all
+operators.register_all = lambda s, d: regs.append(d) or real_register(s, d)
 rows = []
 for _ in range(2):
     spark = get_spark("snapshot-restart", cpus=2)
     spark.sparkContext.setLogLevel("ERROR")
-    operators._PREPARED.clear()
     rows.append(sorted(tuple(r) for r in dedup.dedup_clusters(spark, {sf!r}).collect()))
     spark.stop()
 assert rows[0] == rows[1] and len(rows[0]) > 0, "rows differ across contexts"
 assert len(calls) == 2, calls
+assert len(regs) == 2, regs
 print("RESTART-OK")
 """
 
 
 def test_context_restart_is_a_miss(sf_copy):
     """A new SparkContext never reuses labels checkpointed in the old one
-    (their blocks died with it): the second context rebuilds, no error."""
+    (their blocks died with it): the second context registers its views
+    again and rebuilds, no error."""
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
     out = subprocess.run(
         [sys.executable, "-c", _RESTART.format(repo=str(REPO), sf=sf_copy)],

@@ -182,3 +182,27 @@ def test_torn_state_dir_fails_loudly(spark, tmp_path):
     ).write.parquet(legacy)
     with pytest.raises(ValueError, match="no meta"):
         read_state(spark, legacy)
+
+
+def test_one_file_batch_job_budget(spark, tmp_path):
+    """A one-file micro-batch of the checksum sink runs at most 9 Spark
+    jobs: the batch's file-filtered rows are persisted once for both state
+    writes, and the applied-files log is one distinct over the union (10
+    jobs when it was two)."""
+    inv_dir = str(tmp_path / "inv")
+    state_dir = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    sc = spark.sparkContext
+    for round_tag in ("a", "b"):  # round a warms up; round b is measured
+        for i in range(3):
+            spark.createDataFrame(
+                _mk_rows(f"{round_tag}{i}", 50), INVENTORY_STREAM_SCHEMA
+            ).coalesce(1).write.mode("append").parquet(inv_dir)
+        q = stream_table_checksum(spark, inv_dir, state_dir, ckpt, max_files_per_trigger=1)
+        q.awaitTermination(120)
+    n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert n_batches == 3
+    assert n_jobs <= 9 * n_batches
+    assert read_state(spark, state_dir)["n_rows"] == 300
+
