@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import observed, prepared, scoped_cache, snapshot_memo
+from . import _release_entry, observed, prepared, scoped_cache, snapshot_memo
 
 SHINGLE_N = 5
 EMBEDDING_DIM = 64
@@ -914,7 +914,11 @@ def _cc_labels(edges: DataFrame, what: str) -> DataFrame:
     Previously each round re-JOINED the new and old label relations (a full
     shuffle join per round) just to count differences; labels only ever
     decrease, so `new < old` in-row is the same predicate with zero extra
-    shuffles."""
+    shuffles.
+
+    Each round releases the previous round's checkpoint once its own has
+    run, so only the returned labels stay pinned; the caller releases
+    `edges` once this returns (the labels' lineage reaches neither)."""
     from pyspark.sql import Observation
 
     labels = (
@@ -931,13 +935,14 @@ def _cc_labels(edges: DataFrame, what: str) -> DataFrame:
         )
         new_lbl = F.least(F.col("lbl"), F.coalesce("nbr_lbl", F.col("lbl")))
         obs = Observation()
-        labels = (
+        prev, labels = labels, (
             labels.join(neighbor_min, "doc_id", "left")
             .select("doc_id", new_lbl.alias("lbl"), (new_lbl < F.col("lbl")).alias("chg"))
             .observe(obs, F.sum(F.col("chg").cast("long")).alias("n_chg"))
             .localCheckpoint(eager=True)
             .select("doc_id", "lbl")
         )
+        _release_entry(prev)  # the new round's checkpoint ran: nothing reads it
         # sum over an empty relation observes NULL — an empty graph is
         # converged. The eager localCheckpoint above fires the Observation
         # listener on CLASSIC Spark (Dataset.withAction wraps the checkpoint
@@ -980,7 +985,10 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("e.doc_a", "e.doc_b")
             .localCheckpoint(eager=True)
         )
-        return _cc_labels(edges, "dedup_clusters")
+        try:
+            return _cc_labels(edges, "dedup_clusters")
+        finally:
+            _release_entry(edges)
 
     return snapshot_memo("dedup_labels", spark, sf_dir, build)
 

@@ -29,7 +29,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from . import prepared, scoped_cache
+from . import _release_entry, prepared, scoped_cache
 
 MEDIA_TYPES = ("image", "audio", "video")
 
@@ -645,7 +645,10 @@ def media_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from .dedup import _cc_labels
 
-    labels = _cc_labels(edges, "media_canonical")
+    try:
+        labels = _cc_labels(edges, "media_canonical")
+    finally:
+        _release_entry(edges)
     return docs.join(labels, "doc_id", "left").select(
         "doc_id",
         "media_type",

@@ -202,9 +202,11 @@ def dashboard_report(
     no rows is an empty report, a missing stat_dir or a dir of another
     shape raises) feeds one aggregate, and the driver collects one row:
     the totals, the bounds and the newest `window_minutes` minute rows —
-    2 Spark jobs. start_time is unique per partition (monitor_stats and the
-    streaming leg both write one row per (time_unit, start_time)), so those
-    rows cover every minute of the window; the window is
+    2 Spark jobs. start_time is unique per partition: monitor_stats writes
+    one row per (time_unit, start_time), and so does the streaming leg,
+    whose file sink reads back only logged batches, so a restart that
+    replays a batch adds no row. So those rows cover every minute of the
+    window, each once; the window is
     then zero-filled in Python, as `ddbModel.returnTasksGraphData` builds
     60 zero slots and overwrites the minutes that have a row
     (`UICenter/BackEnd/ddbModel.py:253-275`)."""

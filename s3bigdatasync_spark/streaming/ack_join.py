@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType, TimestampType
 
+from .commit import start_file_sink
+
 ACK_WINDOW = "30 minutes"
 WATERMARK = "30 minutes"
 
@@ -79,45 +81,4 @@ def stream_ack_join(
     status/acked_at) once the watermark proves no ack can still arrive."""
     dispatch = spark.readStream.schema(DISPATCH_SCHEMA).json(dispatch_dir)
     ack = spark.readStream.schema(ACK_SCHEMA).json(ack_dir)
-    out = joined_frame(dispatch, ack, how)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # CRASH WINDOW: a kill after this append but before the checkpoint
-        # commit replays the batch and re-appends the same matches. The
-        # joined row is a pure function of the (dispatch, ack) pair, so
-        # replays are byte-identical; read_matches() dedups on the pair
-        # identity (key, dispatched_at, acked_at). out_dir raw is
-        # at-least-once by design.
-        batch_df.write.mode("append").parquet(out_dir)
-
-    return (
-        out.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_matches(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The exactly-once view of the match sink: dedup on the match identity
-    (key, dispatched_at, acked_at) — one dispatch per (key, dispatched_at),
-    one ack per (key, acked_at), so the triple names the pair uniquely and
-    dropping duplicates removes only crash-replay re-appends (a left-outer
-    never-acked row has acked_at NULL and the same identity contract:
-    append mode emits it exactly once per watermark crossing).
-
-    Implementation notes, both load-bearing: (1) the alias(metadata={})
-    strip — the streaming sink persists the event-time watermark annotation
-    (spark.watermarkDelayMs) into the parquet column metadata and a batch
-    re-read re-attaches the -T delay tag to the plan; (2) full-row
-    distinct() rather than dropDuplicates(subset) — since the triple is
-    unique in committed output and replays are byte-identical, they are
-    semantically equal here, and the subset form compiles to a
-    Deduplicate-with-first() aggregate that trips Catalyst attribute
-    binding under downstream exceptAll plans
-    (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND, reproduced in
-    test_crash_replay_double_append with either note violated)."""
-    df = spark.read.parquet(out_dir)
-    df = df.select(*[F.col(c).alias(c, metadata={}) for c in df.columns])
-    return df.distinct()
+    return start_file_sink(joined_frame(dispatch, ack, how), out_dir, checkpoint_dir)

@@ -29,6 +29,13 @@ would silently bootstrap over live state and lose it.
 Local file system only for the recovery scan and GC (the test/driver
 environment); an object-store deployment lists with its own SDK and
 expires versions with a lifecycle rule.
+
+An append-only stream (monitor, ack_join, dedup, sessions) keeps no state
+of its own: `start_file_sink` starts it on Spark's parquet file sink, which
+logs each batch's files in `<out_dir>/_spark_metadata` before the checkpoint
+commits it, skips a replayed batch id it has already logged, and a batch
+read of out_dir reads only logged files. A plain `spark.read.parquet`
+of out_dir is exactly-once.
 """
 
 from __future__ import annotations
@@ -134,3 +141,52 @@ def commit(
     for d in root.iterdir():
         if _VERSIONED.fullmatch(d.name) and d.name not in keep:
             shutil.rmtree(d, ignore_errors=True)
+
+
+def _last_batch(log_dir: Path) -> int:
+    """The newest batch id a streaming log dir names (`N` or `N.compact`
+    files); -1 for a missing or empty log."""
+    if not log_dir.is_dir():
+        return -1
+    names = (re.fullmatch(r"(\d+)(\.compact)?", f.name) for f in log_dir.iterdir())
+    return max((int(m.group(1)) for m in names if m), default=-1)
+
+
+def start_file_sink(
+    stream: DataFrame, out_dir: str, checkpoint_dir: str, partition_by: Sequence[str] = ()
+):
+    """Start `stream` appending to a parquet file sink at out_dir under
+    checkpoint_dir (availableNow: drain the backlog, then stop); returns the
+    StreamingQuery.
+
+    The file sink logs a batch before the checkpoint commits it and never
+    before the checkpoint plans it, so the sink log's newest batch lies
+    between the checkpoint's newest commit and its newest planned offset
+    (a crash between the log and the commit leaves the sink one batch
+    ahead: the restart replays it and the sink skips it). Outside that
+    range the two dirs belong to different runs: a fresh checkpoint over an
+    old sink dir would replay batch ids the sink has logged and write
+    nothing, and a checkpoint whose batches the sink never logged (a dir
+    written by another sink, or deleted) would lose them. Both raise
+    ValueError before any batch runs. Local file system only, like the
+    recovery scan; on another file system the check passes."""
+    sink = _last_batch(Path(out_dir) / "_spark_metadata")
+    planned = _last_batch(Path(checkpoint_dir) / "offsets")
+    committed = _last_batch(Path(checkpoint_dir) / "commits")
+    if sink > planned or committed > sink:
+        raise ValueError(
+            f"sink dir {out_dir} (last logged batch {sink}) and checkpoint "
+            f"{checkpoint_dir} (last planned batch {planned}, last committed "
+            f"{committed}) come from different runs; start the stream over an "
+            "empty sink dir and an empty checkpoint"
+        )
+    writer = (
+        stream.writeStream.format("parquet")
+        .outputMode("append")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    return writer.start()

@@ -11,8 +11,9 @@ full-history guarantee.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
+from .commit import start_file_sink
 from .queue import TASK_SCHEMA, msg_id
 
 WATERMARK = "30 minutes"
@@ -47,29 +48,4 @@ def stream_dedup_tasks(
         .withWatermark(EVENT_TIME_COL, WATERMARK)
         .dropDuplicatesWithinWatermark(["msg_id"])
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # CRASH WINDOW: a kill after this append but before the checkpoint
-        # commit replays the batch — dropDuplicatesWithinWatermark's state
-        # restores with the checkpoint, so the replay emits the same unique
-        # tasks again, byte-identical. read_tasks() dedups on msg_id;
-        # out_dir raw is at-least-once by design.
-        batch_df.write.mode("append").parquet(out_dir)
-
-    return (
-        deduped.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_tasks(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The exactly-once view of the unique-task sink: full-row distinct()
-    (replays are byte-identical, and msg_id is unique in committed output
-    within the watermark horizon by construction) — removes only
-    crash-replay re-appends. Same reader contract as trending/sessions/
-    ack_join; see ack_join.read_matches for why full-row distinct beats
-    dropDuplicates(subset) here."""
-    return spark.read.parquet(out_dir).distinct()
+    return start_file_sink(deduped, out_dir, checkpoint_dir)

@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -110,7 +109,7 @@ def consume_task_queue(
                 StructField("msg_id", StringType()),
                 StructField("object_key", StringType()),
                 StructField("replication_time_s", DoubleType()),
-                StructField("replication_status", IntegerType()),
+                StructField("replication_status", LongType()),
                 StructField("size", LongType()),
             ]
         )

@@ -12,7 +12,7 @@ restart" done with real streaming state instead of the HWM/clobber design.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
@@ -20,6 +20,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from .commit import start_file_sink
 
 SESSION_GAP_SECONDS = 1800
 
@@ -136,34 +138,4 @@ def stream_sessionize(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # CRASH WINDOW: the state-store update commits with the checkpoint
-        # epoch (Spark's own atomicity), but this parquet append does not —
-        # a kill after the append and before the checkpoint commit replays
-        # the batch against the SAME restored state, emitting byte-identical
-        # session rows again. read_sessions() dedups on the session identity
-        # (user_id, session_start); out_dir raw is at-least-once by design.
-        batch_df.write.mode("append").parquet(out_dir)
-
-    return (
-        sessions.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_sessions(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The exactly-once view of the closed-session sink. (user_id,
-    session_start) uniquely names a closed session — the state machine
-    closes each started session exactly once, and a crash-replayed batch
-    re-emits it from the same restored state with identical end/count — so
-    dedup here removes only replay re-appends
-    (tests/test_stream_sessions.py::test_crash_replay_double_append).
-    Implemented as full-row distinct(): equivalent here (replays are
-    byte-identical and the key is unique in committed output) and it avoids
-    the Deduplicate-with-first() plan shape that trips Catalyst attribute
-    binding under downstream exceptAll (see ack_join.read_matches)."""
-    return spark.read.parquet(out_dir).distinct()
+    return start_file_sink(sessions, out_dir, checkpoint_dir)

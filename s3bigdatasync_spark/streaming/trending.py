@@ -16,6 +16,12 @@ answer incrementally at all.
 At 100 TB: the windowed count state is |window × type| (vocabulary-bounded);
 ranking runs on closed windows only — a few hundred rows per trigger —
 regardless of event volume.
+
+Unlike the append-only streams (streaming/commit.py:start_file_sink), this
+one stays on foreachBatch: the per-window rank needs a finite batch, and
+its out dir holds only the top k that `trending --k` asks for, not every
+row the stream emits, so a file sink has nothing to write directly. A
+replayed batch appends again; read_trending is the exactly-once view.
 """
 
 from __future__ import annotations
@@ -114,8 +120,9 @@ def read_trending(spark: SparkSession, out_dir: str) -> DataFrame:
     (tests/test_stream_trending.py::test_crash_replay_double_append).
     Implemented as full-row distinct(): equivalent here (replays are
     byte-identical and the key is unique in committed output) and it avoids
-    the Deduplicate-with-first() plan shape that trips Catalyst attribute
-    binding under downstream exceptAll (see ack_join.read_matches)."""
+    the Deduplicate-with-first() plan shape of dropDuplicates(subset),
+    which tripped Catalyst attribute binding under a downstream exceptAll
+    (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)."""
     return spark.read.parquet(out_dir).distinct()
 
 

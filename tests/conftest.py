@@ -25,3 +25,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def drop_last_commit(checkpoint_dir: str) -> int:
+    """A crash after a micro-batch wrote its output but before the checkpoint
+    committed it: delete the checkpoint's newest `commits/<N>` and its
+    `.<N>.crc`, so the next start replays batch N. Returns N."""
+    commits = Path(checkpoint_dir) / "commits"
+    n = max(int(f.name) for f in commits.iterdir() if f.name.isdigit())
+    (commits / str(n)).unlink()
+    (commits / f".{n}.crc").unlink(missing_ok=True)
+    return n

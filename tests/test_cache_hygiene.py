@@ -42,22 +42,19 @@ def test_scoped_caches_released_between_queries(spark, sf_dir):
         assert _n_persistent(spark) <= base + 8, f"cache pile-up after {name}"
     released = release_caches()
     assert released > 0  # the sweep exercised real caches, not a no-op
-    # localCheckpoint storage (dedup_clusters' per-round CC pins) is released
-    # by the ContextCleaner when the last reference is GC'd, not by
-    # release_caches() — unpersisting a checkpoint eagerly would break the
-    # documented safe-but-slow recompute contract (a checkpointed RDD cannot
-    # be recomputed once its blocks are dropped). Force both GCs and poll so
-    # the assert measures the steady state, not collector timing (the r11
-    # full-suite flake: 1 checkpoint RDD still awaiting GC at this line).
-    import gc
-    import time
+    assert _n_persistent(spark) <= base
 
-    for _ in range(20):
-        if _n_persistent(spark) <= base:
-            break
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(0.5)
+
+def test_clustering_build_leaves_no_checkpoint(spark, sf_dir):
+    """The clustering build checkpoints its symmetric edges and each
+    label-propagation round; it releases each superseded round and the
+    edges itself, and release_caches() the stored labels. So no checkpoint
+    waits for the ContextCleaner: the count is back at baseline at once,
+    with no GC poll."""
+    release_caches()
+    base = _n_persistent(spark)
+    registry.full_queries()["dedup_clusters"](spark, sf_dir).collect()
+    assert release_caches() > 0
     assert _n_persistent(spark) <= base
 
 

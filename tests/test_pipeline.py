@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from s3bigdatasync_spark.operators.stats import SIZE_BUCKETS
-from s3bigdatasync_spark.operators.windows import TIME_UNITS
+from s3bigdatasync_spark.operators.windows import TIME_UNITS, read_stat_table
 from s3bigdatasync_spark.plans.pipeline import (
     COPY_LOG_SCHEMA,
     STAT_SCHEMA,
@@ -22,7 +22,9 @@ from s3bigdatasync_spark.plans.pipeline import (
     monitor_stats,
     task_executor,
 )
-from s3bigdatasync_spark.streaming.monitor import read_stats, stream_time_rollup
+from s3bigdatasync_spark.streaming.monitor import stream_time_rollup
+
+from .conftest import drop_last_commit
 
 
 def test_full_lifecycle(spark, tmp_path):
@@ -421,7 +423,7 @@ def test_a_stat_dir_of_another_shape_fails_loudly(spark, tmp_path):
         [(1, 60, "ok", 10, 1), (1, 120, "failed", 20, 2)],
         "time_unit int, start_time long, status string, total_size long, total_num long",
     ).write.partitionBy("time_unit").parquet(old)
-    for read in (lambda: dashboard_report(spark, old), lambda: read_stats(spark, old)):
+    for read in (lambda: dashboard_report(spark, old), lambda: read_stat_table(spark, old)):
 
         def call(read=read):
             with pytest.raises(ValueError, match="success_object_size, success_object_num"):
@@ -483,8 +485,9 @@ def test_monitor_stats_equals_python_reference_in_two_jobs(spark, tmp_path):
 def streamed(spark, staged, tmp_path_factory):
     """The staged task_executor log plus one row an hour after it (which
     moves the watermark past every staged minute), rolled up by
-    monitor_stats and by the stream; returns the two stat dirs and the
-    newest window the stream closed."""
+    monitor_stats and by the stream; returns the dirs (the two stat dirs,
+    the log and the stream's checkpoint) and the newest window the stream
+    closed."""
     import shutil
 
     root = tmp_path_factory.mktemp("streamed")
@@ -493,9 +496,9 @@ def streamed(spark, staged, tmp_path_factory):
     t_max = spark.read.parquet(log).agg(F.max("replication_time")).collect()[0][0]
     flush = [("flush", t_max + dt.timedelta(hours=1), 1, 7)]
     spark.createDataFrame(flush, COPY_LOG_SCHEMA).write.mode("append").parquet(log)
-    dirs = {"batch": str(root / "batch"), "stream": str(root / "stream")}
+    dirs = {n: str(root / n) for n in ("batch", "stream", "ckpt")} | {"log": log}
     monitor_stats(spark, log, dirs["batch"])
-    stream_time_rollup(spark, log, dirs["stream"], str(root / "ckpt")).awaitTermination(120)
+    stream_time_rollup(spark, log, dirs["stream"], dirs["ckpt"]).awaitTermination(120)
     closed = spark.read.parquet(dirs["stream"]).agg(F.max("start_time")).collect()[0][0]
     return dirs, closed
 
@@ -505,7 +508,7 @@ def test_stream_over_a_task_executor_log_equals_monitor_stats(spark, staged, str
     closed windows are monitor_stats' time_unit=1 rows, row for row."""
     dirs, closed = streamed
     assert closed is not None, "stream emitted nothing"
-    got = read_stats(spark, dirs["stream"]).select(*_STAT_COLS)
+    got = read_stat_table(spark, dirs["stream"]).select(*_STAT_COLS)
     want = (
         spark.read.schema(STAT_SCHEMA).parquet(dirs["batch"])
         .filter((F.col("time_unit") == 1) & (F.col("start_time") <= closed))
@@ -519,7 +522,9 @@ def test_stream_over_a_task_executor_log_equals_monitor_stats(spark, staged, str
 
 def test_dashboard_report_reads_either_stat_table(spark, staged, streamed, tmp_path):
     """dashboard_report over the streamed stat dir equals the report over
-    monitor_stats' dir cut to the windows the watermark has closed."""
+    monitor_stats' dir cut to the windows the watermark has closed, and
+    stays the same after a crash between the stream's last write and its
+    checkpoint commit is replayed: the sink does not count the replay."""
     dirs, closed = streamed
     cut = str(tmp_path / "cut")
     spark.read.parquet(dirs["batch"]).filter(F.col("start_time") <= closed).write.partitionBy(
@@ -530,3 +535,6 @@ def test_dashboard_report_reads_either_stat_table(spark, staged, streamed, tmp_p
     report = dashboard_report(spark, dirs["stream"], *totals)
     assert report == dashboard_report(spark, cut, *totals)
     assert report["progress"]["success_num"] == staged["result"][0]
+    drop_last_commit(dirs["ckpt"])
+    stream_time_rollup(spark, dirs["log"], dirs["stream"], dirs["ckpt"]).awaitTermination(120)
+    assert dashboard_report(spark, dirs["stream"], *totals) == report

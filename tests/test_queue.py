@@ -47,6 +47,8 @@ def test_queue_drain_dedup_and_dlq(spark, tmp_path):
 
     log = spark.read.parquet(dirs["log"])
     assert log.count() == 30  # duplicates skipped (in-batch + sent-log dedup)
+    # the copy-log type task_executor writes: one dir, one physical type
+    assert dict(log.dtypes)["replication_status"] == "bigint"
     assert log.select("object_key").distinct().count() == 30
     dead = spark.read.parquet(dirs["dead"])
     assert dead.count() == 3  # k007, k017, k027

@@ -6,12 +6,16 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from s3bigdatasync_spark.streaming.ack_join import (
     ACK_SCHEMA,
     DISPATCH_SCHEMA,
     joined_frame,
     stream_ack_join,
 )
+
+from .conftest import drop_last_commit
 
 
 def _write(path, items, fname):
@@ -21,8 +25,12 @@ def _write(path, items, fname):
             f.write(json.dumps(it) + "\n")
 
 
-def _fixture(tmp_path):
-    d, a = tmp_path / "dispatch", tmp_path / "ack"
+@pytest.fixture(scope="module")
+def inputs(tmp_path_factory):
+    """The dispatch and ack dirs every test here streams: 20 dispatches, 12
+    in-window acks, 4 late ones, and a far-future event on each side."""
+    root = tmp_path_factory.mktemp("ack_join")
+    d, a = root / "dispatch", root / "ack"
     dispatches = [
         {"key": f"k{i:02d}", "size": 100 + i, "dispatched_at": "2024-01-15T07:00:00"}
         for i in range(20)
@@ -39,31 +47,39 @@ def _fixture(tmp_path):
     _write(d, dispatches, "d1.json")
     _write(d, late_dispatch, "d2.json")
     _write(a, acks, "a1.json")
-    return d, a
+    return str(d), str(a)
 
 
-def test_inner_join_matches_batch_parity(spark, tmp_path):
-    d, a = _fixture(tmp_path)
-    q = stream_ack_join(spark, str(d), str(a), str(tmp_path / "out"), str(tmp_path / "ck"))
+@pytest.fixture(scope="module")
+def left_outer(spark, inputs, tmp_path_factory):
+    """The left-outer stream drained once; returns (out, checkpoint)."""
+    root = tmp_path_factory.mktemp("left_outer")
+    out, ck = str(root / "out"), str(root / "ck")
+    stream_ack_join(spark, *inputs, out, ck, how="left_outer").awaitTermination(180)
+    return out, ck
+
+
+def _batch_join(spark, inputs):
+    d, a = inputs
+    batch_d = spark.read.schema(DISPATCH_SCHEMA).json(d)
+    batch_a = spark.read.schema(ACK_SCHEMA).json(a)
+    return joined_frame(batch_d, batch_a, "inner")
+
+
+def test_inner_join_matches_batch_parity(spark, inputs, tmp_path):
+    q = stream_ack_join(spark, *inputs, str(tmp_path / "out"), str(tmp_path / "ck"))
     q.awaitTermination(180)
 
     got = spark.read.parquet(str(tmp_path / "out"))
-    batch_d = spark.read.schema(DISPATCH_SCHEMA).json(str(d))
-    batch_a = spark.read.schema(ACK_SCHEMA).json(str(a))
-    want = joined_frame(batch_d, batch_a, "inner")
+    want = _batch_join(spark, inputs)
 
     assert got.count() == 12  # in-window acks only; late acks excluded
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
 
 
-def test_left_outer_surfaces_unacked_dispatches(spark, tmp_path):
-    d, a = _fixture(tmp_path)
-    q = stream_ack_join(
-        spark, str(d), str(a), str(tmp_path / "out2"), str(tmp_path / "ck2"), how="left_outer"
-    )
-    q.awaitTermination(180)
-    got = spark.read.parquet(str(tmp_path / "out2"))
+def test_left_outer_surfaces_unacked_dispatches(spark, left_outer):
+    got = spark.read.parquet(left_outer[0])
 
     matched = got.filter("status IS NOT NULL")
     unmatched = got.filter("status IS NULL")
@@ -74,35 +90,28 @@ def test_left_outer_surfaces_unacked_dispatches(spark, tmp_path):
     assert {f"k{i:02d}" for i in range(12, 20)} <= keys
 
 
-def test_crash_replay_double_append(spark, tmp_path):
-    """Kill window: the match append landed, the checkpoint commit did not —
-    the replayed batch re-appends the same matches. Simulated with a
-    byte-identical re-append (the joined row is a pure function of the
-    (dispatch, ack) pair). read_matches — the exactly-once view keyed on
-    (key, dispatched_at, acked_at) — must still equal the batch join, for
-    both inner matches and left-outer never-acked rows (r6 item 5)."""
-    from s3bigdatasync_spark.streaming.ack_join import read_matches
-
-    d, a = _fixture(tmp_path)
-    out = str(tmp_path / "out3")
-    q = stream_ack_join(
-        spark, str(d), str(a), out, str(tmp_path / "ck3"), how="left_outer"
-    )
-    q.awaitTermination(180)
-
+def test_crash_replay_double_append(spark, inputs, left_outer):
+    """Kill window: the last batch's matches landed but its checkpoint
+    commit did not. The restart replays the batch; the file sink has logged
+    that batch id and skips it, so a plain read still equals the pre-crash
+    rows and the batch join, for both inner matches and left-outer
+    never-acked rows. An orphaned attempt (the same rows appended without a
+    log entry) reads as zero extra rows."""
+    out, ck = left_outer
     committed = spark.read.parquet(out)
-    n_committed = committed.count()
-    assert n_committed > 0
-    committed.write.mode("append").parquet(out)
-    assert spark.read.parquet(out).count() == 2 * n_committed
+    before = sorted(map(tuple, committed.collect()))
+    assert before
 
-    got = read_matches(spark, out)
-    assert got.count() == n_committed
+    drop_last_commit(ck)
+    stream_ack_join(spark, *inputs, out, ck, how="left_outer").awaitTermination(180)
+    assert sorted(map(tuple, spark.read.parquet(out).collect())) == before
+
+    committed.write.mode("append").parquet(out)
+    got = spark.read.parquet(out)
+    assert sorted(map(tuple, got.collect())) == before
     matched = got.filter("status IS NOT NULL")
     assert matched.count() == 12
-    batch_d = spark.read.schema(DISPATCH_SCHEMA).json(str(d))
-    batch_a = spark.read.schema(ACK_SCHEMA).json(str(a))
-    want = joined_frame(batch_d, batch_a, "inner")
+    want = _batch_join(spark, inputs)
     assert matched.exceptAll(want).count() == 0
     assert want.exceptAll(matched).count() == 0
     keys = {r["key"] for r in got.filter("status IS NULL").collect()}

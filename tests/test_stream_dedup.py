@@ -5,7 +5,11 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from s3bigdatasync_spark.streaming.dedup import stream_dedup_tasks
+
+from .conftest import drop_last_commit
 
 
 def _write(path, items, fname):
@@ -26,47 +30,47 @@ def _task(i, at):
     }
 
 
-def test_duplicates_within_watermark_dropped(spark, tmp_path):
-    q = tmp_path / "queue"
+@pytest.fixture(scope="module")
+def drained(spark, tmp_path_factory):
+    """The queue drained once: 10 tasks, then the same 10 re-enqueued five
+    minutes later (producer retry) plus 5 new, then 3 new and 2 retries
+    stamped inside the horizon. The last file moves no watermark, so its
+    batch, which emits the 3 new tasks, is the stream's last. Returns
+    (queue, out, checkpoint)."""
+    root = tmp_path_factory.mktemp("dedup")
+    q = root / "queue"
     t0 = "2024-01-15T07:00:00"
     t1 = "2024-01-15T07:05:00"
     _write(q, [_task(i, t0) for i in range(10)], "a.json")
-    # same 10 tasks re-enqueued 5 minutes later (producer retry), plus 5 new
     _write(q, [_task(i, t1) for i in range(15)], "b.json")
-
-    qq = stream_dedup_tasks(
-        spark, str(q), str(tmp_path / "out"), str(tmp_path / "ck"), max_files_per_trigger=1
-    )
-    qq.awaitTermination(180)
-
-    out = spark.read.parquet(str(tmp_path / "out"))
-    assert out.count() == 15  # 10 originals + 5 new; 10 retries dropped
-    assert out.select("msg_id").distinct().count() == 15
+    _write(q, [_task(i, "2024-01-15T07:01:00") for i in (3, 4, 15, 16, 17)], "c.json")
+    out, ck = str(root / "out"), str(root / "ck")
+    stream_dedup_tasks(spark, str(q), out, ck, max_files_per_trigger=1).awaitTermination(180)
+    return str(q), out, ck
 
 
-def test_crash_replay_double_append(spark, tmp_path):
-    """Kill window: the unique-task append landed but the checkpoint commit
-    did not — the replay (same restored dedup state) re-emits the same
-    unique tasks. Simulated with a byte-identical re-append; read_tasks —
-    the exactly-once view — must still show each msg_id once (r6 verdict
-    item 5 applied to the watermark-dedup module)."""
-    from s3bigdatasync_spark.streaming.dedup import read_tasks
+def test_duplicates_within_watermark_dropped(spark, drained):
+    out = spark.read.parquet(drained[1])
+    assert out.count() == 18  # 10 originals + 5 + 3 new; 12 retries dropped
+    assert out.select("msg_id").distinct().count() == 18
 
-    q = tmp_path / "queue2"
-    _write(q, [_task(i, "2024-01-15T07:00:00") for i in range(8)], "a.json")
-    qq = stream_dedup_tasks(
-        spark, str(q), str(tmp_path / "out2"), str(tmp_path / "ck2"),
-        max_files_per_trigger=1,
-    )
-    qq.awaitTermination(180)
 
-    out_dir = str(tmp_path / "out2")
+def test_crash_replay_double_append(spark, drained):
+    """Kill window: the last batch's unique tasks landed but its checkpoint
+    commit did not. The restart replays the batch (same restored dedup
+    state); the file sink has logged that batch id and skips it, so a plain
+    read still shows each msg_id once. An orphaned attempt (the same rows
+    appended without a log entry) reads as zero extra rows."""
+    q, out_dir, ck = drained
     committed = spark.read.parquet(out_dir)
-    n_committed = committed.count()
-    assert n_committed == 8
-    committed.write.mode("append").parquet(out_dir)
-    assert spark.read.parquet(out_dir).count() == 16
+    before = sorted(map(tuple, committed.collect()))
+    assert len(before) == 18
 
-    got = read_tasks(spark, out_dir)
-    assert got.count() == 8
-    assert got.select("msg_id").distinct().count() == 8
+    drop_last_commit(ck)
+    stream_dedup_tasks(spark, q, out_dir, ck, max_files_per_trigger=1).awaitTermination(180)
+    assert sorted(map(tuple, spark.read.parquet(out_dir).collect())) == before
+
+    committed.write.mode("append").parquet(out_dir)
+    got = spark.read.parquet(out_dir)
+    assert got.count() == 18
+    assert got.select("msg_id").distinct().count() == 18

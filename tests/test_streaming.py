@@ -5,12 +5,17 @@ reference's HWM-restart + PUT-overwrite design violates (SURVEY §7.4.1)."""
 from __future__ import annotations
 
 import datetime as dt
+import re
+from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
-from s3bigdatasync_spark.operators.windows import stat_rollup
+from s3bigdatasync_spark.operators.windows import read_stat_table, stat_rollup
 from s3bigdatasync_spark.plans.pipeline import COPY_LOG_SCHEMA
 from s3bigdatasync_spark.streaming.monitor import batch_equivalent, stream_time_rollup
+
+from .conftest import drop_last_commit
 
 # the stat-table columns in kernel order (a partitioned read-back reorders)
 COLS = [
@@ -36,36 +41,36 @@ def _mk_rows(start_min: int, n: int):
     ]
 
 
-def test_stream_converges_to_batch(spark, tmp_path):
-    log_dir = str(tmp_path / "log")
-    out_dir = str(tmp_path / "stat")
-    ckpt = str(tmp_path / "ckpt")
+@pytest.fixture(scope="module")
+def converged(spark, tmp_path_factory):
+    """Two incremental appends (≙ two job runs over a growing monitor
+    table), the stream drained after each. Returns (log, stat, ckpt)."""
+    root = tmp_path_factory.mktemp("converged")
+    log_dir, out_dir, ckpt = (str(root / d) for d in ("log", "stat", "ckpt"))
+    for start_min in (0, 30):
+        spark.createDataFrame(_mk_rows(start_min, 40), COPY_LOG_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(log_dir)
+        q = stream_time_rollup(spark, log_dir, out_dir, ckpt, minutes=1, max_files_per_trigger=1)
+        q.awaitTermination(120)
+    return log_dir, out_dir, ckpt
 
-    # two incremental appends (≙ two job runs over a growing monitor table)
-    spark.createDataFrame(_mk_rows(0, 40), COPY_LOG_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(log_dir)
-    q = stream_time_rollup(spark, log_dir, out_dir, ckpt, minutes=1, max_files_per_trigger=1)
-    q.awaitTermination(120)
 
-    spark.createDataFrame(_mk_rows(30, 40), COPY_LOG_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(log_dir)
-    q = stream_time_rollup(spark, log_dir, out_dir, ckpt, minutes=1, max_files_per_trigger=1)
-    q.awaitTermination(120)
-
-    # append-mode with watermark emits only closed windows; rows newer than
-    # (max_event - watermark) are still in state. Compare on the closed span.
-    got = spark.read.parquet(out_dir).select(*COLS)
-    expected = batch_equivalent(spark, log_dir, minutes=1).select(*COLS)
-    max_closed = got.agg(F.max("start_time")).collect()[0][0]
-    assert max_closed is not None, "stream emitted nothing"
-    exp_rows = sorted(
-        tuple(r)
-        for r in expected.filter(F.col("start_time") <= max_closed).collect()
+def _closed_parity(spark, log_dir: str, got: list[tuple]) -> None:
+    """`got` (rows in COLS order) equals the batch rollup on the closed span:
+    append mode with a watermark emits only closed windows, rows newer than
+    (max_event - watermark) are still in state."""
+    assert got, "stream emitted nothing"
+    max_closed = max(r[1] for r in got)
+    expected = batch_equivalent(spark, log_dir, minutes=1).filter(
+        F.col("start_time") <= max_closed
     )
-    got_rows = sorted(tuple(r) for r in got.collect())
-    assert got_rows == exp_rows
+    assert sorted(got) == sorted(map(tuple, expected.select(*COLS).collect()))
+
+
+def test_stream_converges_to_batch(spark, converged):
+    log_dir, out_dir, _ = converged
+    _closed_parity(spark, log_dir, [tuple(r) for r in spark.read.parquet(out_dir).select(*COLS).collect()])
 
 
 def test_stream_parity_at_sf01_scale(spark, tmp_path):
@@ -269,42 +274,59 @@ def test_stream_parity_at_sf01_with_late_tercile(spark, tmp_path):
     assert emitted == on_time_closed  # none of the n_dropped late rows leaked in
 
 
-def test_crash_replay_double_append(spark, tmp_path):
-    """Kill window: the closed-window stat append landed but the checkpoint
-    commit did not — the replayed batch re-appends the same finalized
-    windows. Simulated with a byte-identical re-append; read_stats — the
-    exactly-once view — must still equal the batch rollup on the closed
-    span (r6 verdict item 5 applied to the monitor module)."""
-    from s3bigdatasync_spark.streaming.monitor import read_stats
+def test_crash_replay_double_append(spark, converged):
+    """Kill window: the last batch's closed windows landed but its checkpoint
+    commit did not. The restart replays the batch, re-emitting the same
+    finalized windows; the file sink has logged that batch id and skips it,
+    so a plain read still equals the pre-crash rows and the batch rollup on
+    the closed span. An orphaned attempt (the same rows appended without a
+    log entry) reads as zero extra rows."""
+    log_dir, out_dir, ckpt = converged
 
-    log_dir = str(tmp_path / "log2")
-    out_dir = str(tmp_path / "stat2")
-    ckpt = str(tmp_path / "ckpt2")
-    spark.createDataFrame(_mk_rows(0, 40), COPY_LOG_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(log_dir)
-    q = stream_time_rollup(spark, log_dir, out_dir, ckpt, minutes=1, max_files_per_trigger=1)
-    q.awaitTermination(120)
-    # a far-future append closes the first batch's windows
-    spark.createDataFrame(_mk_rows(600, 5), COPY_LOG_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(log_dir)
-    q = stream_time_rollup(spark, log_dir, out_dir, ckpt, minutes=1, max_files_per_trigger=1)
-    q.awaitTermination(120)
+    def rows() -> list[tuple]:
+        return sorted(map(tuple, read_stat_table(spark, out_dir).select(*COLS).collect()))
 
-    committed = spark.read.parquet(out_dir)
-    n_committed = committed.count()
-    assert n_committed > 0
-    committed.write.mode("append").partitionBy("time_unit").parquet(out_dir)
-    assert spark.read.parquet(out_dir).count() == 2 * n_committed
+    before = rows()
+    _closed_parity(spark, log_dir, before)
+    drop_last_commit(ckpt)
+    stream_time_rollup(
+        spark, log_dir, out_dir, ckpt, minutes=1, max_files_per_trigger=1
+    ).awaitTermination(120)
+    assert rows() == before
 
-    got = {tuple(r) for r in read_stats(spark, out_dir).select(*COLS).collect()}
-    assert len(got) == n_committed
-    closed_max = max(st for _, st, *_ in got)
-    expected = {
-        tuple(r)
-        for r in batch_equivalent(spark, log_dir, minutes=1)
-        .filter(f"start_time <= {closed_max}")
-        .collect()
-    }
-    assert got == expected
+    spark.read.parquet(out_dir).write.mode("append").partitionBy("time_unit").parquet(out_dir)
+    assert rows() == before
+
+
+def _sink_files(out_dir: str) -> list[str]:
+    return sorted(str(f) for f in Path(out_dir).rglob("*") if f.is_file())
+
+
+def test_fresh_checkpoint_over_a_logged_sink_dir_raises(spark, converged, tmp_path):
+    """A fresh checkpoint would replay batch ids the sink has logged, and
+    the sink would skip them: nothing written, silently. The starter
+    refuses it, naming both dirs, before any batch runs."""
+    log_dir, out_dir, _ = converged
+    fresh = str(tmp_path / "fresh_ckpt")
+    files = _sink_files(out_dir)
+    with pytest.raises(ValueError, match=f"{re.escape(out_dir)}.*{re.escape(fresh)}"):
+        stream_time_rollup(spark, log_dir, out_dir, fresh)
+    assert not spark.streams.active
+    assert _sink_files(out_dir) == files and not Path(fresh).exists()
+
+
+def test_committed_checkpoint_over_an_unlogged_sink_dir_raises(spark, converged, tmp_path):
+    """A checkpoint whose committed batches the sink dir never logged (a dir
+    another sink wrote, or an emptied one) would never write those batches'
+    rows again. The starter refuses it, naming both dirs, before any batch
+    runs."""
+    log_dir, _, ckpt = converged
+    other = tmp_path / "other_stat"
+    spark.createDataFrame([(1, 60, 1, 1, 0, 0)], ",".join(f"{c} long" for c in COLS)).write.parquet(
+        str(other)
+    )
+    files = _sink_files(str(other))
+    with pytest.raises(ValueError, match=f"{re.escape(str(other))}.*{re.escape(ckpt)}"):
+        stream_time_rollup(spark, log_dir, str(other), ckpt)
+    assert not spark.streams.active
+    assert _sink_files(str(other)) == files
