@@ -32,19 +32,20 @@ _PREPARED: set[tuple[str, str, str]] = set()
 # SNAPSHOT-SCOPED (snapshot_memo). A relation that is a function of the
 # files of the views it reads — the near-dup cluster labels (`documents`),
 # the src/dst inventory diff (`inventory_src`, `inventory_dst`), the DSIR
-# importance weights (`documents`) — lives for one (SparkSession, sf_dir,
-# snapshot of those files). It is built once and every later query over the
-# same unchanged files reuses it. A changed listing, another sf_dir, another
-# session or a new SparkContext is a miss that replaces the slot. The
-# registry wrapper keeps these across queries; release_caches() drains both
-# lifetimes. An entry is stored in one of two forms:
-#   * a lazily filled persist() (the diff, the DSIR weights): building a
-#     query on it runs no Spark job, the first action fills it, and it
-#     spills to disk under memory pressure. Replacing or releasing the slot
-#     unpersists it at once — a rewritten file keeps its path, and Spark's
-#     cache lookup matches plans by path, so a stale entry left registered
-#     would answer for the new files. A DataFrame built on it stays valid
-#     after that (it recomputes from the files).
+# importance weights and the per-document corpus table (`documents`) —
+# lives for one (SparkSession, sf_dir, snapshot of those files). It is built
+# once and every later query over the same unchanged files reuses it. A
+# changed listing, another sf_dir, another session or a new SparkContext is
+# a miss that replaces the slot. The registry wrapper keeps these across
+# queries; release_caches() drains both lifetimes. An entry is stored in
+# one of two forms:
+#   * a lazily filled persist() (the diff, the DSIR weights, the corpus
+#     table): building a query on it runs no Spark job, the first action
+#     fills it, and it spills to disk under memory pressure. Replacing or
+#     releasing the slot unpersists it at once — a rewritten file keeps its
+#     path, and Spark's cache lookup matches plans by path, so a stale entry
+#     left registered would answer for the new files. A DataFrame built on
+#     it stays valid after that (it recomputes from the files).
 #   * an eager localCheckpoint (the cluster labels, whose fixpoint needs one
 #     per round anyway). Replacing the slot only drops the reference, so a
 #     DataFrame built on the old entry stays valid until its blocks are

@@ -1083,8 +1083,8 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stored once per `documents` snapshot (operators.snapshot_memo) as a
     lazily filled persist(): building a query on it runs no Spark job, the
     first action computes the weights, and every later call over the same
-    files (corpus_release_manifest per release) reads the stored per-doc
-    rows. Scale: the stored relation is one row per raw-pool doc, spillable
+    files reads the stored per-doc rows (plans.llm_corpus.training_corpus,
+    stored itself, reads them once per snapshot). Scale: the stored relation is one row per raw-pool doc, spillable
     to disk; a store under a plan dir waits for ROADMAP direction 1."""
     return snapshot_memo(
         "dsir_importance", spark, sf_dir, lambda: _dsir_weights(spark, sf_dir).persist()

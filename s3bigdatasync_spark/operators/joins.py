@@ -278,43 +278,61 @@ def diff_apply_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot must reconstruct src exactly — the property that makes the diff
     a sufficient sync plan (ship only New/Update payloads + Delete keys, and
     the replica converges). Reconstruction: dst minus (Update ∪ Delete keys),
-    plus src rows for (New ∪ Update keys); mismatches counted via symmetric
-    anti-joins on the full (key, size, etag) identity.
+    plus src rows for (New ∪ Update keys); mismatches counted on the full
+    (key, size, etag) identity.
 
     One-row report — n_missing/n_extra MUST be 0 and invertible true; a
     nonzero value at production scale means the diff and the copier disagree
     about object identity (the class of bug the reference can't detect).
     Scale: reads the stored diff (_diff_base), so the diff's full outer join
-    runs once per inventory snapshot; the anti-joins co-partition on the
-    same key. One plan of cross-joined one-row counts: building it runs no
-    Spark job."""
+    runs once per inventory snapshot. Every count comes from ONE shuffle on
+    key: src rows, dst rows and the diff's per-key Update/Delete ("touched")
+    and New/Update ("incoming") flags are unioned, a window over key says
+    whether each src row is reconstructed (its key is incoming) and each dst
+    row (its key is not touched), and the (key, size, etag) groups that
+    follow reuse the key partitioning. A src identity with no reconstructed
+    row is missing, all its copies, as a left-anti join would count them
+    (and vice versa for extra); like the oracle's EXCEPT ALL, a NULL matches
+    a NULL. Building it runs no Spark job."""
     p = prepared(spark, sf_dir)
-    src = p.table("inventory_src").select("key", "size", "etag")
-    dst = p.table("inventory_dst").select("key", "size", "etag")
-    diff = _diff_base(spark, sf_dir).select("key", "variance")
-    touched = diff.filter(F.col("variance").isin("Update", "Delete")).select("key")
-    incoming = diff.filter(F.col("variance").isin("New", "Update")).select("key")
-    # read by three of the counts below: cached, lazily (no job here)
-    reconstructed = (
-        dst.join(touched, "key", "left_anti")
-        .unionByName(src.join(incoming, "key", "left_semi"))
-        .transform(scoped_cache)
-    )
     identity = ["key", "size", "etag"]
-    counts = [
-        (src, "n_src"),
-        (dst, "n_dst"),
-        (reconstructed, "n_reconstructed"),
-        (src.join(reconstructed, identity, "left_anti"), "n_missing"),
-        (reconstructed.join(src, identity, "left_anti"), "n_extra"),
-    ]
-    row = None
-    for df, name in counts:
-        one = df.agg(F.count(F.lit(1)).alias(name))
-        row = one if row is None else row.crossJoin(one)
-    return row.withColumn(
-        "invertible", (F.col("n_missing") == 0) & (F.col("n_extra") == 0)
+    zero, one = F.lit(0), F.lit(1)
+    variance = F.col("variance")
+    rows = (
+        p.table("inventory_src")
+        .select(*identity, one.alias("s"), zero.alias("d"))
+        .unionByName(p.table("inventory_dst").select(*identity, zero.alias("s"), one.alias("d")))
+        .unionByName(
+            _diff_base(spark, sf_dir).select(
+                "key",
+                variance.isin("Update", "Delete").cast("int").alias("touched"),
+                variance.isin("New", "Update").cast("int").alias("incoming"),
+            ),
+            allowMissingColumns=True,  # NULL s and d: a diff row counts nowhere
+        )
     )
+    per_key = Window.partitionBy("key")
+
+    def flag(c):  # 0 for a key the diff has no row for (Same)
+        return F.coalesce(F.max(c).over(per_key), zero)
+
+    reconstructed = F.col("s") * flag("incoming") + F.col("d") * (1 - flag("touched"))
+    per_identity = (
+        rows.select(*identity, "s", "d", reconstructed.alias("r"))
+        .groupBy(identity)
+        .agg(*(F.sum(c).alias(c) for c in ("s", "r", "d")))
+    )
+
+    def total(c):  # a sum over no rows is NULL; the oracle's count(*) is 0
+        return F.coalesce(F.sum(c), zero)
+
+    return per_identity.agg(
+        total("s").alias("n_src"),
+        total("d").alias("n_dst"),
+        total("r").alias("n_reconstructed"),
+        total(F.when(F.col("r") == 0, F.col("s"))).alias("n_missing"),
+        total(F.when(F.col("s") == 0, F.col("r"))).alias("n_extra"),
+    ).withColumn("invertible", (F.col("n_missing") == 0) & (F.col("n_extra") == 0))
 
 
 _DIFF_APPLY_SQL = oracle_cte("inventory_src", "inventory_dst") + """

@@ -247,7 +247,7 @@ def data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffer then carries min/max over STRING columns (not a mutable
     fixed-size type), every aggregate in the Expand pipeline fell back to
     SortAggregate: a full Sort of the 3.6M expanded wide rows on a 6-part
-    key dominated the query (3.4 s of its 3.7 s total, probe_phases r12).
+    key dominated the query (3.4 s of its 3.7 s total, OPTIMIZATION_r12.md).
     Splitting min/max+counts (no Expand, global agg needs no sort) from the
     countDistincts (Expand path, but with count-only buffers every stage is
     a HashAggregate) removes the sort entirely — same scan count per side,

@@ -16,8 +16,7 @@ argument re-based onto a manifest). Segmented rather than drift.py's
 whole-relation `versioned_count_sink` because THIS state is unbounded
 (one row per distinct content): the full-rewrite sink pays O(state) per
 batch, the segmented sink O(batch) amortized — the round-9 verdict's
-scale-killer, measured closed in tools/probe_dedup_state.py's
-state≫batch regime.
+scale-killer, measured closed in the state≫batch regime (SCALING.md).
 
 Decision order is merge-THEN-decide, the ppl_gate contract: a batch's
 hashes enter the state before its documents are gated, so the keeper for
@@ -183,7 +182,7 @@ def admission_report(
     before the merge-agg — a broadcast semi-join of each segment scan
     against the O(batch) hash set — so gating a 2k-doc batch against a
     1B-row index shuffles and aggregates O(batch) rows, not O(state)
-    (measured in tools/probe_gate_read.py; SCALING.md r11). Every
+    (measured in SCALING.md r11). Every
     staleness invariant below is per-content-group over the batch's own
     hashes, so pruning cannot change a verdict. prune=False keeps the
     full assembly for A/B measurement."""

@@ -188,12 +188,12 @@ def test_diff_is_invertible(spark, sf_dir):
 
 
 def test_diff_apply_check_builds_no_job(spark, sf_dir):
-    """diff_apply_check is one plan of cross-joined one-row counts: building
-    it runs no Spark job (the eager counts it replaced ran 28-35), the
-    cross joins broadcast, and it still matches its DuckDB oracle. Run over
-    the stored diff (operators.snapshot_memo) with the query scope released,
-    as the registry wrapper does, it costs at most 24 jobs; it ran 29 when
-    every run rebuilt the diff."""
+    """diff_apply_check is one shuffle on key and one aggregate: building it
+    runs no Spark job (the eager counts it replaced ran 28-35) and it still
+    matches its DuckDB oracle. Run over the stored diff
+    (operators.snapshot_memo) with the query scope released, as the
+    registry wrapper does, it costs at most 5 jobs; it ran 29 when every
+    run rebuilt the diff and 23 as five cross-joined one-row counts."""
     from s3bigdatasync_spark.operators import joins, release_query_caches
 
     from .oracle_utils import assert_match
@@ -206,7 +206,7 @@ def test_diff_apply_check_builds_no_job(spark, sf_dir):
     assert_match(df, joins.ORACLES["diff_apply_check"], sf_dir)
     release_query_caches()
     _, run_jobs = _in_job_group(spark, lambda: joins.diff_apply_check(spark, sf_dir).collect())
-    assert run_jobs <= 24
+    assert run_jobs <= 5
 
 
 def test_snapshot_history_intervals_well_formed(spark):

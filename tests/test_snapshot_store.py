@@ -6,7 +6,9 @@ snapshot), and every query over the same snapshot reuses it —
   * the src/dst inventory diff (`inventory_src`, `inventory_dst`), shared by
     inventory_diff, diff_summary, transfer_cost_estimate, diff_apply_check;
   * the DSIR importance weights (`documents`), read by
-    corpus_release_manifest.
+    corpus_release_manifest through the corpus table;
+  * the per-document corpus table, training_corpus (`documents`), which
+    corpus_yield_report and corpus_release_manifest each aggregate once.
 
 All tests run on a private copy of the sf0.001 tables, so rewriting
 `documents.parquet` or `lineitem.parquet` never touches the shared
@@ -27,6 +29,7 @@ from pyspark.storagelevel import StorageLevel
 
 from s3bigdatasync_spark import operators, registry, sql_views
 from s3bigdatasync_spark.operators import curation, dedup, joins, release_caches
+from s3bigdatasync_spark.plans import llm_corpus
 from s3bigdatasync_spark.views import register_all
 
 from .conftest import REPO, SF_DIR, SF_SMALL
@@ -45,6 +48,8 @@ CLUSTERING = [
     "corpus_release_manifest",
 ]
 BATCH = ("dedup_clusters", "corpus_yield_report", "corpus_release_manifest")
+# the two reports over the stored corpus table
+REPORTS = ("corpus_yield_report", "corpus_release_manifest")
 # every registry query that reads the stored inventory diff
 DIFF = ("inventory_diff", "diff_summary", "transfer_cost_estimate", "diff_apply_check")
 # perfbench's sync_lifecycle planning leg
@@ -91,9 +96,12 @@ def builds(monkeypatch):
 
 @pytest.fixture
 def stored(monkeypatch):
-    """Counts builds of the stored diff ("diff") and DSIR weights ("dsir")."""
+    """Counts builds of the stored diff ("diff"), DSIR weights ("dsir") and
+    corpus table ("corpus"). The corpus builder reads the DSIR slot, so an
+    empty corpus slot over an empty DSIR slot logs "corpus", "dsir"."""
     calls = []
     real_diff, real_dsir = joins.diff_kernel, curation._dsir_weights
+    real_corpus = llm_corpus._corpus_gates
 
     def diff(src, dst):
         calls.append("diff")
@@ -103,8 +111,13 @@ def stored(monkeypatch):
         calls.append("dsir")
         return real_dsir(spark, sf_dir)
 
+    def corpus(spark, sf_dir):
+        calls.append("corpus")
+        return real_corpus(spark, sf_dir)
+
     monkeypatch.setattr(joins, "diff_kernel", diff)
     monkeypatch.setattr(curation, "_dsir_weights", dsir)
+    monkeypatch.setattr(llm_corpus, "_corpus_gates", corpus)
     return calls
 
 
@@ -208,9 +221,9 @@ def test_concurrent_construction_builds_once(spark, sf_copy, builds):
 
 
 def test_warm_batch_job_budget(spark, sf_copy):
-    """After one warm-up call the corpus-curation batch stays within 50
-    Spark jobs (it ran 102 when every call rebuilt the labels), and a warm
-    dedup_clusters within 5."""
+    """After one warm-up call the corpus-curation batch stays within 10
+    Spark jobs (102 when every call rebuilt the labels, 20 when each report
+    rebuilt the corpus table), and a warm dedup_clusters within 5."""
     qs = registry.full_queries()
     for name in BATCH:
         qs[name](spark, sf_copy).collect()
@@ -218,21 +231,21 @@ def test_warm_batch_job_budget(spark, sf_copy):
         spark, lambda: [qs[n](spark, sf_copy).collect() for n in BATCH]
     )
     _, dc_jobs = _in_job_group(spark, lambda: qs["dedup_clusters"](spark, sf_copy).collect())
-    assert batch_jobs <= 50
+    assert batch_jobs <= 10
     assert dc_jobs <= 5
 
 
 def test_repeated_diff_and_dsir_calls_build_once(spark, sf_copy, stored):
     """Four diff queries, each called twice, share one stored diff; three
-    DSIR readers share one stored set of weights. Every result matches its
-    DuckDB oracle."""
+    DSIR readers share one stored set of weights, and the two manifest calls
+    one stored corpus table. Every result matches its DuckDB oracle."""
     qs = registry.full_queries()
     for name in DIFF + DIFF:
         assert_match(qs[name](spark, sf_copy), _ORACLES[name], sf_copy)
     assert stored == ["diff"]
     for name in ("dsir_importance", "corpus_release_manifest", "corpus_release_manifest"):
         assert_match(qs[name](spark, sf_copy), _ORACLES[name], sf_copy)
-    assert stored == ["diff", "dsir"]
+    assert stored == ["diff", "dsir", "corpus"]
 
 
 def test_rewritten_lineitem_is_a_diff_miss(spark, sf_copy, stored):
@@ -265,50 +278,76 @@ def test_rewritten_documents_are_a_dsir_miss(spark, sf_copy, stored):
     assert _rows(after) != before  # the rewrite changed the weights
     for name in ("dsir_importance", "corpus_release_manifest"):
         assert_match(qs[name](spark, sf_copy), _ORACLES[name], sf_copy)
-    assert stored == ["dsir", "dsir"]
+    assert stored == ["dsir", "dsir", "corpus"]
+
+
+def test_rewritten_documents_are_a_corpus_miss(spark, sf_copy, stored):
+    """A rewritten documents file is a miss for the corpus table: it is
+    built again, the old entry is unpersisted (not only replaced: a stale
+    entry left registered could answer for the rewritten file), and both
+    reports match their oracles on the new files."""
+    qs = registry.full_queries()
+    before = _rows(qs["corpus_yield_report"](spark, sf_copy))
+    old = operators._SNAPSHOT["training_corpus"][1]
+    assert old.storageLevel != StorageLevel.NONE
+    _rewrite_documents(sf_copy)
+    register_all(spark, sf_copy)
+    after = qs["corpus_yield_report"](spark, sf_copy)
+    assert stored == ["corpus", "dsir", "corpus", "dsir"]
+    assert old.storageLevel == StorageLevel.NONE
+    assert operators._SNAPSHOT["training_corpus"][1] is not old
+    assert _rows(after) != before  # the rewrite changed the yield
+    for name in REPORTS:
+        assert_match(qs[name](spark, sf_copy), _ORACLES[name], sf_copy)
+    assert stored == ["corpus", "dsir", "corpus", "dsir"]
 
 
 def test_building_stored_queries_runs_no_job(spark, sf_copy, stored):
     """Building a query on an empty slot stores a lazy persist(): no Spark
-    job until the caller's action. corpus_release_manifest is built once the
-    cluster labels are stored (their fixpoint is eager by design), so its
-    build measures the DSIR store alone."""
+    job until the caller's action. The corpus reports are built once the
+    cluster labels are stored (their fixpoint is eager by design), so their
+    first build measures the corpus and DSIR stores alone."""
     qs = registry.full_queries()
     qs["dedup_clusters"](spark, sf_copy).collect()
-    for name in DIFF + ("corpus_release_manifest",):
+    for name in DIFF + REPORTS:
         df, jobs = _in_job_group(spark, lambda: qs[name](spark, sf_copy))
         assert jobs == 0, name
         _noop(df)
-    assert stored == ["diff", "dsir"]  # built on the first call, then reused
-    for name in DIFF + ("corpus_release_manifest",):
+    # built on the first call, then reused
+    assert stored == ["diff", "corpus", "dsir"]
+    for name in DIFF + REPORTS:
         _, jobs = _in_job_group(spark, lambda: qs[name](spark, sf_copy))
         assert jobs == 0, name
 
 
 def test_warm_planning_and_release_job_budgets(spark, sf_copy):
     """Warm, the planning leg reads one stored diff (22 jobs when each
-    query rebuilt it) and corpus_release_manifest one stored DSIR relation
-    (22 jobs when every call rebuilt it)."""
+    query rebuilt it), and each corpus report is one aggregate over the
+    stored corpus table (the manifest ran 9 jobs and the yield report 7
+    when each call rebuilt the table)."""
     qs = registry.full_queries()
-    for name in PLANNING + ("corpus_release_manifest",):
+    for name in PLANNING + REPORTS:
         _noop(qs[name](spark, sf_copy))
     _, plan_jobs = _in_job_group(spark, lambda: [_noop(qs[n](spark, sf_copy)) for n in PLANNING])
-    _, crm_jobs = _in_job_group(
-        spark, lambda: _noop(qs["corpus_release_manifest"](spark, sf_copy))
-    )
+    report_jobs = {
+        n: _in_job_group(spark, lambda: _noop(qs[n](spark, sf_copy)))[1] for n in REPORTS
+    }
     assert plan_jobs <= 10
-    assert crm_jobs <= 12
+    assert report_jobs["corpus_release_manifest"] <= 2
+    assert report_jobs["corpus_yield_report"] <= 2
 
 
 def test_release_leaves_no_persisted_relation(spark, sf_copy, stored):
-    """release_caches() unpersists the stored diff and DSIR relations at
-    once: nothing they (or the query scope) persisted is left."""
+    """release_caches() unpersists the stored diff, DSIR and corpus
+    relations at once: nothing they (or the query scope) persisted is
+    left."""
     qs = registry.full_queries()
     ids = _persistent(spark)
-    for name in DIFF + ("dsir_importance",):
+    for name in DIFF + ("dsir_importance",) + REPORTS:
         _noop(qs[name](spark, sf_copy))
     added = _persistent(spark) - ids
     assert added
+    assert {"inventory_diff", "dsir_importance", "training_corpus"} <= set(operators._SNAPSHOT)
     entries = [v for _, v in operators._SNAPSHOT.values()]
     assert release_caches() >= 2
     assert not operators._SNAPSHOT
