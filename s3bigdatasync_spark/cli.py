@@ -107,18 +107,13 @@ def _cmd_list_producer(spark: SparkSession, args) -> int:
 def _make_copy_fn(backend: str, src_root: str | None, dst_root: str | None):
     """CopyFn factory. `touch` marks success by creating an empty dst file
     (test/dry-run); `fs` copies src_root/key → dst_root/key; `s3` is the
-    production boto3 server-side copy (libs/s3_utils.py:17-35), import-gated
-    like sources.metadata."""
+    production boto3 server-side copy, sources.metadata.make_s3_copy_fn
+    (its client is built lazily in each worker process, so the function
+    pickles)."""
     if backend == "s3":
-        import boto3  # import-gated: raises cleanly if not installed
+        from .sources.metadata import make_s3_copy_fn
 
-        client = boto3.client("s3")
-
-        def s3_copy(src_bucket: str, dst_bucket: str, key: str) -> bool:
-            client.copy({"Bucket": src_bucket, "Key": key}, dst_bucket, key)
-            return True
-
-        return s3_copy
+        return make_s3_copy_fn()
 
     from pathlib import Path
 

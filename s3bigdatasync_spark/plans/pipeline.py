@@ -1,7 +1,7 @@
 """The three reference lifecycles (SURVEY §3) as composable Spark jobs.
 
 §3.1 ListProducer  → list_producer():  inventory scan → stats + task store
-§3.2 TaskExecutor  → task_executor():  task store → copy → copy_log + DLQ
+§3.2 TaskExecutor  → task_executor():  task store → copy_tasks() → copy_log + DLQ
 §3.3 Monitor/UI    → monitor_stats():  copy_log → 1/5/60-minute stat table
                    → dashboard_report(): stat table → progress + graph JSON
 
@@ -13,9 +13,10 @@ tests), and failures are quarantined by a filter. Each stage is one pass:
 its counts are Observation metrics of its own write.
 
 Not idempotent yet: copy_log and dead_letter are append-only, so a re-run
-over the same task store copies and logs every object again. Skipping
-logged objects (a copy_log anti-join, the operators.joins.dedup_anti_join
-pattern) is ROADMAP direction 1.
+over the same task store copies and logs every object again. The queue
+consumer (streaming.queue) skips redelivered tasks, but not a batch replayed
+after a crash. Skipping logged objects (a copy_log anti-join, the
+operators.joins.dedup_anti_join pattern) is ROADMAP direction 1.
 """
 
 from __future__ import annotations
@@ -131,25 +132,38 @@ def task_executor(
     copy_log_dir: str,
     dead_letter_dir: str,
 ) -> tuple[int, int]:
-    """§3.2: consume the task store, copy every object exactly once, log
-    both statuses, quarantine failures (B8/B9).
+    """§3.2: consume the task store with copy_tasks. The task store is read
+    with its declared TASK_SCHEMA, so no inference job runs. Returns
+    (n_success, n_failed)."""
+    tasks = spark.read.schema(TASK_SCHEMA).json(tasks_dir)
+    return copy_tasks(tasks, copy_fn, copy_log_dir, dead_letter_dir)
 
-    The task store is read with its declared schema (no inference job) and
-    copied by `mapInArrow` with a declared output schema, so no copy runs
-    twice to infer types — the Spark translation of the competing-consumers
-    loop (TaskExecutor.py:18-102). The log, holding BOTH statuses like the
+
+def copy_tasks(
+    tasks: DataFrame, copy_fn: CopyFn, copy_log_dir: str, dead_letter_dir: str
+) -> tuple[int, int]:
+    """The copy stage of task_executor and of the streaming queue consumer
+    (streaming.queue): copy every task row's object once, log both
+    statuses, quarantine failures (B8/B9).
+
+    `tasks` holds at least TASK_SCHEMA's columns. They are copied by
+    `mapInArrow` with a declared output schema, so no copy runs twice to
+    infer types — the Spark translation of the competing-consumers loop
+    (TaskExecutor.py:18-102). The log, holding BOTH statuses like the
     reference's (TaskExecutor.py:66-80), is written once; an Observation on
-    that write counts rows and failures. Failures also go to the dead-letter
-    table (79-85), read back from the log files this call added, so an
-    earlier run's failures are not dead-lettered again (one writer per
-    copy_log_dir assumed). The job stays 'successful' like the reference;
-    task retries replace SQS redrive. Returns (n_success, n_failed).
+    that write counts rows and failures. Failures also go to the
+    dead-letter table (79-85), read back from the log files this call
+    added, so an earlier call's failures are not dead-lettered again. That
+    assumes one writer per copy_log_dir: one task_executor call or one
+    queue consumer at a time. The job stays 'successful' like the
+    reference; task retries replace SQS redrive. Returns (n_success,
+    n_failed).
     """
+    spark = tasks.sparkSession
     obs = Observation()
     failed = F.col("replication_status") == 0
     log = (
-        spark.read.schema(TASK_SCHEMA).json(tasks_dir)
-        .mapInArrow(_copy_batches(copy_fn), _COPY_OUT_SCHEMA)
+        tasks.mapInArrow(_copy_batches(copy_fn), _COPY_OUT_SCHEMA)
         .withColumn("replication_time", F.timestamp_seconds("replication_time"))
         .observe(obs, F.count("*").alias("n"), F.count(F.when(failed, 1)).alias("failed"))
     )

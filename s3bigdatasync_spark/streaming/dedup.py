@@ -29,15 +29,7 @@ def stream_dedup_tasks(
 ):
     """Drain the task-queue dir, dropping duplicate msg_ids that arrive
     within the watermark horizon; unique tasks append to out_dir."""
-    from pyspark.sql.types import StructField, StructType, TimestampType
-
-    # StructType.add MUTATES self (and returns it) — calling it on the
-    # shared module-level TASK_SCHEMA appended enqueued_at once per
-    # stream_dedup_tasks call, making the second stream in a process fail
-    # with AMBIGUOUS_REFERENCE. Build a fresh StructType instead.
-    schema = StructType(
-        TASK_SCHEMA.fields + [StructField(EVENT_TIME_COL, TimestampType())]
-    )
+    schema = f"{TASK_SCHEMA}, {EVENT_TIME_COL} timestamp"
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)

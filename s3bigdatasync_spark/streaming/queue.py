@@ -9,11 +9,17 @@ translation:
   queue dir of JSON task files  →  file-stream source (maxFilesPerTrigger =
   the backpressure knob)  →  foreachBatch:
       1. msg-id dedup inside the batch (dropDuplicates) AND against the
-         committed log (left-anti) — the J1/J3 idempotence pattern, which
-         with checkpointing upgrades at-least-once file delivery to
-         effectively-exactly-once;
-      2. execute the copy callable per partition;
-      3. append results to copy_log, failures additionally to dead_letter.
+         sent log (left-anti) — the J1/J3 idempotence pattern: a
+         redelivered task file or a producer retry copies nothing again;
+      2. plans.pipeline.copy_tasks, the copy stage task_executor runs: one
+         copy per task, both statuses to copy_log, failures to dead_letter;
+      3. append the batch's msg_ids to the sent log.
+
+Not exactly-once: a crash after step 2 and before step 3 and the checkpoint
+commit replays the batch, which copies and logs its tasks again.
+task_executor has the same window: a re-run after its copy-log append copies
+every task again. Closing it is ROADMAP direction 1 (restartable,
+exactly-once migration).
 
 At 100 TB the queue dir is an S3 prefix the producer writes ~100-object task
 files into; competing consumers ≙ one streaming query with as many executors
@@ -23,28 +29,13 @@ round-robin machinery disappears.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
-TASK_SCHEMA = StructType(
-    [
-        StructField("bucket", StringType()),
-        StructField("key", StringType()),
-        StructField("size", LongType()),
-        StructField("etag", StringType()),
-        StructField("dst_bucket", StringType()),
-    ]
-)
+from ..plans import pipeline
+
+TASK_SCHEMA = pipeline.TASK_SCHEMA + ", etag string"
 
 
 def msg_id(df: DataFrame) -> DataFrame:
@@ -60,7 +51,7 @@ def msg_id(df: DataFrame) -> DataFrame:
 def consume_task_queue(
     spark: SparkSession,
     queue_dir: str,
-    copy_fn: Callable[[str, str, str], bool],
+    copy_fn: pipeline.CopyFn,
     copy_log_dir: str,
     dead_letter_dir: str,
     sent_log_dir: str,
@@ -74,16 +65,14 @@ def consume_task_queue(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(queue_dir)
     )
-    fn = copy_fn
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch = msg_id(batch_df).dropDuplicates(["msg_id"])
-        # anti-join against the committed sent-log (J3 idempotent sink):
-        # re-delivered files (checkpoint loss, producer retry) are skipped,
-        # mirroring the "已经发送" check (inventory_lib.py:146-162).
-        spark_l = batch.sparkSession
+        # anti-join against the sent log (J3 idempotent sink): re-delivered
+        # files (checkpoint loss, producer retry) are skipped, mirroring the
+        # "已经发送" check (inventory_lib.py:146-162).
         try:
-            sent = spark_l.read.parquet(sent_log_dir).select("msg_id")
+            sent = batch.sparkSession.read.schema("msg_id string").parquet(sent_log_dir)
             batch = batch.join(F.broadcast(sent), "msg_id", "left_anti")
         except AnalysisException as e:
             # Only a missing sent-log (first batch ever) may skip the dedup
@@ -92,42 +81,8 @@ def consume_task_queue(
             # idempotence and re-execute delivered copies.
             if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
                 raise
-
-        def run_partition(rows):
-            import time as _t
-
-            for r in rows:
-                ok = False
-                try:
-                    ok = fn(r["bucket"], r["dst_bucket"], r["key"])
-                except Exception:
-                    ok = False
-                yield (r["msg_id"], r["key"], float(_t.time()), 1 if ok else 0, r["size"])
-
-        result_schema = StructType(
-            [
-                StructField("msg_id", StringType()),
-                StructField("object_key", StringType()),
-                StructField("replication_time_s", DoubleType()),
-                StructField("replication_status", LongType()),
-                StructField("size", LongType()),
-            ]
-        )
-        rdd = batch.rdd.mapPartitions(run_partition)
-        results = (
-            spark_l.createDataFrame(rdd, result_schema)  # explicit schema: batch may be empty
-            .withColumn("replication_time", F.timestamp_seconds("replication_time_s"))
-            .drop("replication_time_s")
-            .cache()
-        )
-        results.select(
-            "object_key", "replication_time", "replication_status", "size"
-        ).write.mode("append").parquet(copy_log_dir)
-        failed = results.filter(F.col("replication_status") == 0)
-        if failed.take(1):
-            failed.write.mode("append").parquet(dead_letter_dir)
-        results.select("msg_id").write.mode("append").parquet(sent_log_dir)
-        results.unpersist()
+        pipeline.copy_tasks(batch, copy_fn, copy_log_dir, dead_letter_dir)
+        batch.select("msg_id").write.mode("append").parquet(sent_log_dir)
 
     return (
         stream.writeStream.option("checkpointLocation", checkpoint_dir)

@@ -178,6 +178,17 @@ def test_copy_fn_backends(tmp_path):
     assert (dst / "b" / "empty.bin").exists()
 
 
+def test_s3_copy_fn_pickles():
+    """Spark ships the copy function to its workers, so the `s3` backend
+    must pickle: it builds its boto3 client in each worker, not on the
+    driver, whose client holds an unpicklable SSLContext. No request is
+    made."""
+    pytest.importorskip("boto3")
+    from pyspark import cloudpickle
+
+    cloudpickle.dumps(cli._make_copy_fn("s3", None, None))
+
+
 def test_monitor_stream_subcommand(spark, tmp_path, capsys):
     """The streaming leg as a CLI verb: copy_log parquet in, checkpointed
     watermarked rollup out, availableNow drain-and-exit semantics."""

@@ -7,6 +7,7 @@ import json
 
 from pyspark.sql import functions as F
 
+from s3bigdatasync_spark.plans.pipeline import COPY_LOG_SCHEMA
 from s3bigdatasync_spark.streaming.queue import consume_task_queue
 
 
@@ -35,8 +36,10 @@ def test_queue_drain_dedup_and_dlq(spark, tmp_path):
     _write_tasks(qdir, [_task(i) for i in range(10)])
 
     dirs = {n: str(tmp_path / n) for n in ("log", "dead", "sent", "ckpt")}
+    calls = spark.sparkContext.accumulator(0)
 
     def copy_fn(src, dst, key):
+        calls.add(1)
         return not key.endswith("7")
 
     q = consume_task_queue(
@@ -45,13 +48,14 @@ def test_queue_drain_dedup_and_dlq(spark, tmp_path):
     )
     q.awaitTermination(180)
 
+    assert calls.value == 30  # one copy per unique task
     log = spark.read.parquet(dirs["log"])
     assert log.count() == 30  # duplicates skipped (in-batch + sent-log dedup)
-    # the copy-log type task_executor writes: one dir, one physical type
-    assert dict(log.dtypes)["replication_status"] == "bigint"
+    # the copy log task_executor writes: same columns, same types
+    assert log.dtypes == spark.createDataFrame([], COPY_LOG_SCHEMA).dtypes
     assert log.select("object_key").distinct().count() == 30
     dead = spark.read.parquet(dirs["dead"])
-    assert dead.count() == 3  # k007, k017, k027
+    assert sorted(r["object_key"] for r in dead.collect()) == ["k007", "k017", "k027"]
     assert spark.read.parquet(dirs["sent"]).count() == 30
 
     # redelivery after restart: new file with 5 already-sent + 5 new tasks
@@ -61,6 +65,7 @@ def test_queue_drain_dedup_and_dlq(spark, tmp_path):
         max_files_per_trigger=1,
     )
     q.awaitTermination(180)
+    assert calls.value == 35
     log = spark.read.parquet(dirs["log"])
     assert log.count() == 35  # only the 5 genuinely-new tasks executed
     assert log.select("object_key").distinct().count() == 35
